@@ -20,14 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "q55-geo-score", "q51-geo-pip", "q52-geo-zone", "q53-geo-range-join",
-    "q54-geo-knn", "q50-geo-cell", "q20-agg-basic", "q10-join-inner",
-    "q14-join-bcast", "q30-rank", "q66-geo-salted-join", "q75-ann-topk",
-    "q90-stream-tumble", "q69-geo-knn-points", "q68-geo-overlay-join",
-    "q60-img-roundtrip", "q64b-multimodal-frames", "q72b-dedup-minhash-fast",
-    "q82-geo-intersects-ri", "q72-dedup-minhash-lsh",
-]
+from bench import HEADLINE  # noqa: E402  (main() is behind __main__)
 
 
 def _setup():

@@ -101,6 +101,8 @@ def images_pdf_for_indices(
     pixel arrays (Python-side consumers only — never ship it through Arrow):
     roundtrip checks need the pre-encode reference, and regenerating it costs
     as much as the procedural render itself (~0.35 ms/image, round 8)."""
+    if keep_px and not with_payload:
+        raise ValueError("keep_px=True needs with_payload=True: no pixels are rendered without it")
     idx = np.asarray(idx, dtype=np.int64)
     n = len(idx)
     x, y = points_for_indices(idx, seed)
@@ -138,13 +140,9 @@ def images_pdf_for_indices(
         "lon": lon,
         "lat": lat,
     }
-    if keep_px and with_payload:
+    if keep_px:
         cols["px_ref"] = pxs
     return pd.DataFrame(cols)
-
-
-def images_pdf(n: int = 2_000, seed: int = SEED, with_payload: bool = True) -> pd.DataFrame:
-    return images_pdf_for_indices(np.arange(n), seed, with_payload)
 
 
 # ---------------------------------------------------------------------------
@@ -257,20 +255,3 @@ def factors_pdf() -> pd.DataFrame:
             "lagefaktor": [1.25, 1.0, 0.75],
         }
     )
-
-
-def rings_to_numpy(rings_cell) -> list[np.ndarray]:
-    """Decode the rings column (list of list of {x,y} dicts / Rows) back to
-    numpy rings — used inside pandas UDF kernels."""
-    out = []
-    for ring in rings_cell:
-        out.append(
-            np.array(
-                [
-                    [p["x"], p["y"]] if isinstance(p, dict) else [p.x, p.y]
-                    for p in ring
-                ],
-                dtype=np.float64,
-            )
-        )
-    return out

@@ -16,7 +16,8 @@ Kernels:
   triangulate                       — ear clipping (handles non-convex rings)
   intersection_area                 — exact polygon ∩ polygon area via
                                       triangulated clipping (non-convex OK)
-  clip_rect                         — fast axis-aligned clip (returns area)
+  zone_band_strips                  — distance bands as raster strips,
+                                      optionally only under a window
   point_segments_dist               — vectorized point→segment distances
   point_to_polygon_dist             — 0 inside, else min edge distance
   zone_of_points                    — Lagefaktor distance band per point
@@ -204,14 +205,6 @@ def clip_convex(subject: Ring, clip: Ring) -> Ring:
     return out
 
 
-def clip_rect(subject: Ring, xmin: float, ymin: float, xmax: float, ymax: float) -> Ring:
-    """Clip ring against an axis-aligned rectangle (convex, CCW)."""
-    rect = np.array(
-        [[xmin, ymin], [xmax, ymin], [xmax, ymax], [xmin, ymax]], dtype=np.float64
-    )
-    return clip_convex(subject, rect)
-
-
 def clip_area(subject: Ring, clip: Ring) -> float:
     c = clip_convex(subject, clip)
     return ring_area(c) if len(c) >= 3 else 0.0
@@ -366,18 +359,6 @@ def intersection_area(a_rings: list[Ring], b_rings: list[Ring]) -> float:
     return max(total, 0.0)
 
 
-def intersection_pieces(a_rings: list[Ring], b_rings: list[Ring]) -> list[Ring]:
-    """Clipped fragments of A.outer against B's outer triangles (for piece
-    output; areas must be combined with hole corrections via
-    intersection_area when holes are present)."""
-    out = []
-    for tri in triangulate(b_rings[0]):
-        c = clip_convex(a_rings[0], tri)
-        if len(c) >= 3 and ring_area(c) > 1e-12:
-            out.append(c)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # distances
 # ---------------------------------------------------------------------------
@@ -450,7 +431,7 @@ def zone_band_strips(
     polys: list[list[Ring]],
     thresholds: tuple[float, ...] = (100.0, 625.0),
     resolution: float = 4.0,
-    bounds: tuple[float, float, float, float] | None = None,
+    window: tuple[float, float, float, float] | None = None,
 ) -> np.ndarray:
     """Materialize the <thresholds[i] distance bands around construction
     polygons as horizontal rect strips on a raster of `resolution` meters.
@@ -463,31 +444,40 @@ def zone_band_strips(
     This replaces explicit offset-polygon construction (arc-joined Minkowski
     buffers self-intersect on non-convex inputs); the rect strips are convex,
     so downstream overlay uses exact Sutherland–Hodgman clipping per strip.
+
+    The raster origin and extent always come from the polygons' bboxes
+    (padded by the widest band). `window=(x0, y0, x1, y1)` evaluates only
+    the cells within one cell of the window, clamped to the raster. Cell
+    centres and strip edges are computed from GLOBAL column/row indices, so
+    every evaluated cell has the same zone as in the full raster and each
+    windowed strip is a full strip cut at the window's outer cells — a cut
+    end lies a cell beyond the window, never inside it.
     """
-    if bounds is None:
-        xs0 = []
-        ys0 = []
-        xs1 = []
-        ys1 = []
-        for rings in polys:
-            bx = ring_bbox(rings[0])
-            xs0.append(bx[0])
-            ys0.append(bx[1])
-            xs1.append(bx[2])
-            ys1.append(bx[3])
-        pad = max(thresholds) + 2 * resolution
-        bounds = (min(xs0) - pad, min(ys0) - pad, max(xs1) + pad, max(ys1) + pad)
-    xmin, ymin, xmax, ymax = bounds
+    bboxes = [ring_bbox(rings[0]) for rings in polys]
+    pad = max(thresholds) + 2 * resolution
+    xmin = min(b[0] for b in bboxes) - pad
+    ymin = min(b[1] for b in bboxes) - pad
+    xmax = max(b[2] for b in bboxes) + pad
+    ymax = max(b[3] for b in bboxes) + pad
     nx = int(np.ceil((xmax - xmin) / resolution))
     ny = int(np.ceil((ymax - ymin) / resolution))
-    cx = xmin + (np.arange(nx) + 0.5) * resolution
+    c0, c1, r0, r1 = 0, nx, 0, ny
+    if window is not None:
+        wx0, wy0, wx1, wy1 = window
+        c0 = max(c0, int(np.floor((wx0 - xmin) / resolution)) - 1)
+        c1 = min(c1, int(np.ceil((wx1 - xmin) / resolution)) + 1)
+        r0 = max(r0, int(np.floor((wy0 - ymin) / resolution)) - 1)
+        r1 = min(r1, int(np.ceil((wy1 - ymin) / resolution)) + 1)
+        if c0 >= c1 or r0 >= r1:
+            return np.zeros((0, 5))
+    ncols = c1 - c0
+    cx = xmin + (np.arange(c0, c1) + 0.5) * resolution
     strips = []
-    # row-chunked to bound memory: (chunk*nx) points per distance pass
-    chunk = max(1, int(2_000_000 / max(nx, 1)))
+    # row-chunked to bound memory: (chunk*ncols) points per distance pass
+    chunk = max(1, int(2_000_000 / ncols))
     dmax = max(thresholds)
-    bboxes = [ring_bbox(rings[0]) for rings in polys]
-    for y0 in range(0, ny, chunk):
-        rows = np.arange(y0, min(y0 + chunk, ny))
+    for y0 in range(r0, r1, chunk):
+        rows = np.arange(y0, min(y0 + chunk, r1))
         cy = ymin + (rows + 0.5) * resolution
         gx, gy = np.meshgrid(cx, cy)
         fx = gx.ravel()
@@ -502,7 +492,7 @@ def zone_band_strips(
         d = np.full(fx.shape, np.inf)
         if near.any():
             d[near] = min_dist_to_polygons(fx[near], fy[near], polys)
-        d = d.reshape(len(rows), nx)
+        d = d.reshape(len(rows), ncols)
         zone = np.full(d.shape, len(thresholds), dtype=np.int32)
         for z in range(len(thresholds) - 1, -1, -1):
             zone = np.where(d < thresholds[z], z, zone)
@@ -511,16 +501,16 @@ def zone_band_strips(
             # merge horizontal runs of equal zone (skip outermost zone)
             change = np.flatnonzero(np.diff(zrow)) + 1
             starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [nx]))
+            ends = np.concatenate((change, [ncols]))
             for s, e in zip(starts, ends):
                 z = int(zrow[s])
                 if z == len(thresholds):
                     continue
                 strips.append(
                     (
-                        xmin + s * resolution,
+                        xmin + (c0 + s) * resolution,
                         ymin + r * resolution,
-                        xmin + e * resolution,
+                        xmin + (c0 + e) * resolution,
                         ymin + (r + 1) * resolution,
                         float(z),
                     )

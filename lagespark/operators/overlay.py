@@ -14,11 +14,13 @@ protected areas. The outermost zone is computed as the exact remainder
 (total − inner bands), so total area is conserved exactly.
 
 Distribution: compensatory features are processed as applyInPandas groups
-(one group per feature); band strips + protected polygons ride broadcast.
-This is the config-side of the join — the 10^12-row image/point side never
-touches this path (it uses with_zone/pip_join). For feature sets too large
-for a driver pass, zone strips can be generated per-tile with
-lagespark.operators.tile.
+(one group per feature); Baufeld + protected polygons ride in the closure.
+Each group rasterizes the band strips only in a window around its own
+feature's bbox (geom.zone_band_strips(window=...)), on the one global grid
+derived from the Baufeld bboxes — the strips a feature clips against are
+those of the full raster, so no driver pass over the whole extent is
+needed. This is the config-side of the join — the 10^12-row image/point
+side never touches this path (it uses with_zone/pip_join).
 """
 
 from __future__ import annotations
@@ -34,16 +36,6 @@ from lagespark.operators.spatial import FeatureSet
 DEFAULT_THRESHOLDS = (100.0, 625.0)
 
 
-def compute_zone_strips(
-    baufeld: FeatureSet,
-    thresholds: tuple[float, ...] = DEFAULT_THRESHOLDS,
-    resolution: float = 4.0,
-) -> np.ndarray:
-    """(K, 5) [xmin, ymin, xmax, ymax, zone] convex strips for the inner
-    distance bands (driver-side; Baufeld is config-scale)."""
-    return geom.zone_band_strips(baufeld.polys(), thresholds, resolution)
-
-
 def zone_area_pieces(
     gruen: DataFrame,
     baufeld: FeatureSet,
@@ -54,11 +46,12 @@ def zone_area_pieces(
     """gruenflaeche → (feature_id, zone, bonus, area) pieces.
 
     Per feature (one applyInPandas group): exact clip areas vs each zone
-    strip, split protected/unprotected against each biotope polygon; zone of
-    the outermost band is the exact remainder. Output areas are snapped to
-    1e-6 m² for cross-platform stability (SURVEY.md §7 hard-part 2).
+    strip under the feature's bbox window, split protected/unprotected
+    against each biotope polygon; zone of the outermost band is the exact
+    remainder. Output areas are snapped to 1e-6 m² for cross-platform
+    stability (SURVEY.md §7 hard-part 2).
     """
-    strips = compute_zone_strips(baufeld, thresholds, resolution)
+    bf_polys = baufeld.polys()
     bt_polys = [(fid, biotope.rings[fid], float(biotope.attrs.loc[fid, "bonus"])) for fid in biotope.ids]
     outer_zone = len(thresholds)
 
@@ -81,6 +74,7 @@ def zone_area_pieces(
             bt_inner = {bt_id: 0.0 for bt_id, _, _ in bt_polys}
             zone_inner = 0.0
             bbox = (r.xmin, r.ymin, r.xmax, r.ymax)
+            strips = geom.zone_band_strips(bf_polys, thresholds, resolution, window=bbox)
             sel = strips[
                 (strips[:, 0] < bbox[2])
                 & (strips[:, 2] > bbox[0])

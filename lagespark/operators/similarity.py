@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lagespark.operators.spatial import _repartition_for_kernel
+
 _NN_T = ArrayType(
     StructType(
         [
@@ -45,19 +47,6 @@ _NN_T = ArrayType(
         ]
     )
 )
-
-
-def _repartition_for_kernel(df: DataFrame) -> DataFrame:
-    """Spread rows before a CPU-bound pandas UDF: AQE coalesces small-byte
-    shuffles to 1-2 partitions, which would serialize the kernel (see
-    lagespark.operators.spatial._repartition_for_kernel).
-
-    NO oversubscription here (round 8): every similarity kernel is uniform
-    per-row (fixed-dim dot products / ADC lookups), so the 8× multiplier
-    the geometry kernels use for load balancing was pure per-task
-    Arrow/worker overhead — 256 near-empty tasks cost 2-3× the whole query
-    at sf0.1 (q76 4.6→1.9 s, q76c 4.8→2.5 s, q74b 3.8→1.9 s)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _normalized(mat: np.ndarray) -> np.ndarray:

@@ -2,8 +2,8 @@
 
 Design (scale-first):
   * The fact side (points / image records) is indexed with a cell id computed
-    by NATIVE Catalyst floor arithmetic (grid index) or a vectorized pandas
-    UDF (S2 index) — the cell id is the shuffle/broadcast join key.
+    by NATIVE Catalyst arithmetic (grid or S2 index) — the cell id is the
+    shuffle/broadcast join key.
   * Feature sets (construction / compensatory / protected polygons) are
     config-scale (thousands, not billions): their covers are built driver-side
     and BROADCAST; the polygon coordinate arrays ride to executors inside the
@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, DoubleType, IntegerType, LongType
+from pyspark.sql.types import BooleanType, DoubleType, IntegerType
 
 from lagespark.kernels import cells, geom
 
@@ -74,19 +74,6 @@ def with_grid_cell(
     )
 
 
-def with_s2_cell(
-    df: DataFrame, lat: str = "lat", lon: str = "lon", level: int = 15, out: str = "cell_s2"
-) -> DataFrame:
-    """S2-family cell id (H3-res-9-equivalent at level 15) via a vectorized
-    pandas UDF over Arrow batches (BASELINE.json:6)."""
-
-    @F.pandas_udf(LongType())
-    def enc(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        return pd.Series(cells.s2_encode(lat_s.to_numpy(), lon_s.to_numpy(), level))
-
-    return df.withColumn(out, enc(F.col(lat), F.col(lon)))
-
-
 def with_s2_cell_native(
     df: DataFrame, lat: str = "lat", lon: str = "lon", level: int = 15, out: str = "cell_s2"
 ) -> DataFrame:
@@ -94,8 +81,7 @@ def with_s2_cell_native(
     whole face-projection + quadratic-st + bit-interleave chain runs inside
     whole-stage codegen (cells.s2_cell_sql_steps replays the numpy kernel's
     exact double-op order; parity vs s2_encode is test-pinned, and the same
-    step chain is the DuckDB oracle). Prefer this in scans; the pandas-UDF
-    variant remains for parity testing."""
+    step chain is the DuckDB oracle)."""
     steps = cells.s2_cell_sql_steps(lat, lon, level, "spark")
     tmp = [name for name, _ in steps if name != "cell_s2"]
     # the fixed _s2* step names are written-then-dropped: an input column
@@ -714,22 +700,18 @@ def knn_join(
 # ---------------------------------------------------------------------------
 
 
-def _repartition_for_kernel(df: DataFrame, mult: int = 8) -> DataFrame:
-    """Repartition a (typically skinny) DataFrame before a CPU-bound pandas
-    UDF stage. AQE sizes shuffle partitions by BYTES — after a join or
-    groupBy of small rows it coalesces to one or two partitions, which would
-    serialize the kernel. One extra cheap shuffle buys full parallelism.
+def _repartition_for_kernel(df: DataFrame) -> DataFrame:
+    """Spread rows to one partition per core before a CPU-bound pandas-UDF
+    stage. AQE sizes shuffle partitions by BYTES — after a join or groupBy
+    of small rows it coalesces to one or two partitions, which would
+    serialize the kernel. One extra cheap round-robin shuffle buys full
+    parallelism, and already balances rows by count.
 
-    `mult` oversubscribes partitions beyond core count for LOAD BALANCING —
-    keep the default for kernels whose per-row cost varies (polygon clips:
-    vertex counts and cover multiplicities differ by orders of magnitude),
-    pass mult=1 for uniform per-row kernels (fixed-dim vector math): there
-    the extra tasks are pure Arrow/worker-invocation overhead — measured
-    2-3× on the sf0.1 similarity queries (q76 4.6→1.9 s, q76c 4.8→2.5 s,
-    q74b 3.8→1.9 s; round 8). Sizing stays cluster-proportional either way
-    (defaultParallelism-based)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(max(par, min(mult * par, 256)))
+    No oversubscription, not even for variable-cost polygon clips: every
+    Python-worker task pays a fixed start cost (~0.2 s per core slot on a
+    4-vCPU box; tools/python_task_cost.py re-measures it), which outweighs
+    the load balance extra tasks buy (DESIGN_DECISIONS.md #30)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def _bbox_cover_cells(df: DataFrame, cell_size: float, prefix: str) -> DataFrame:
@@ -959,7 +941,7 @@ def overlay_join(
         # intersects_join_ri's per-side rect probe): when every deduped pair
         # is rect×rect — the common all-rect cadastre case — the kernel
         # branch contributes NOTHING but still costs two broadcast builds
-        # (flat ring payloads), a 256-partition exchange and an
+        # (flat ring payloads), a round-robin exchange and an
         # ArrowEvalPython stage full of empty tasks. One limit(1) probe on
         # the already-checkpointed pair list decides; mixed inputs pay only
         # that probe. Only safe behind the checkpoint (the probe would

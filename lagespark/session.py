@@ -59,20 +59,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = ()) -> dict:
-    """Load harness parquet tables (TESTDATA.md) as DataFrames."""
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

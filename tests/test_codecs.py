@@ -7,6 +7,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from lagespark import fixtures
 from lagespark.image import codecs
 
 
@@ -99,6 +100,26 @@ def test_phash_robust_to_qdct():
         out = codecs.decode_image(codecs.encode_image(px, "qdct"), "qdct")
         d = bin((codecs.phash64(px) ^ codecs.phash64(out)) & (2**64 - 1)).count("1")
         assert d <= 4, f"phash hamming {d} after qdct for image {i}"
+
+
+@pytest.mark.parametrize("fmt", ["raw", "ppm", "png", "qdct"])
+def test_encoders_leave_px_unchanged(fmt):
+    """The image generator hands ONE pixel array to encode_image, phash64
+    and the keep_px roundtrip reference: neither may write into it."""
+    for i, px in _imgs():
+        ref = px.copy()
+        px.flags.writeable = False  # an in-place write raises instead
+        codecs.encode_image(px, fmt)
+        codecs.phash64(px)
+        assert (px == ref).all(), f"{fmt} encode/phash mutated image {i}"
+
+
+def test_keep_px_needs_payload():
+    with pytest.raises(ValueError, match="keep_px"):
+        fixtures.images_pdf_for_indices(np.arange(4), with_payload=False, keep_px=True)
+    pdf = fixtures.images_pdf_for_indices(np.arange(4), keep_px=True)
+    for row in pdf.itertuples():
+        assert codecs.encode_image(row.px_ref, row.fmt) == row.bytes
 
 
 def test_psnr_basics():

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pytest
 from hypothesis import assume, given, settings
@@ -116,6 +118,85 @@ def test_zone_band_strips_area_converges():
     assert area == pytest.approx(exact, rel=0.02)
     # strips carry zone 0 only
     assert set(strips[:, 4].tolist()) == {0.0}
+
+
+def _cut_to(strips, w):
+    """Strips cut to window w (degenerate pieces dropped), sorted."""
+    lo = np.maximum(strips[:, :2], w[:2])
+    hi = np.minimum(strips[:, 2:4], w[2:])
+    keep = (lo < hi).all(axis=1)
+    return sorted(map(tuple, np.column_stack([lo, hi, strips[:, 4]])[keep]))
+
+
+def _check_window(polys, thresholds, resolution, full, w):
+    got = geom.zone_band_strips(polys, thresholds, resolution, window=w)
+    assert _cut_to(got, w) == _cut_to(full, w)
+    # each windowed strip is ONE full strip, cut only a cell beyond w — so a
+    # cut end never falls inside the feature whose bbox is the window
+    for x0, y0, x1, _, z in got:
+        (src,) = full[(full[:, 1] == y0) & (full[:, 4] == z) & (full[:, 0] <= x0) & (full[:, 2] >= x1)]
+        assert src[0] == x0 or x0 < w[0] - 0.5 * resolution
+        assert src[2] == x1 or x1 > w[2] + 0.5 * resolution
+
+
+def _windows(strips):
+    """Windows in per-mille steps of the strips' extent: inside, clamped at
+    the raster edge, wholly outside, and zero-area."""
+    x0, y0 = strips[:, :2].min(axis=0)
+    x1, y1 = strips[:, 2:4].max(axis=0)
+    dx, dy = (x1 - x0) / 1000.0, (y1 - y0) / 1000.0
+    pos, size = st.integers(-300, 1100), st.one_of(st.just(0), st.integers(0, 400))
+    return st.tuples(pos, pos, size, size).map(
+        lambda t: (x0 + t[0] * dx, y0 + t[1] * dy, x0 + (t[0] + t[2]) * dx, y0 + (t[1] + t[3]) * dy)
+    )
+
+
+@functools.cache
+def _fixture_baufeld():
+    from lagespark import fixtures
+    from lagespark.operators.spatial import FeatureSet
+
+    polys = FeatureSet(fixtures.baufeld_pdf()).polys()
+    return polys, geom.zone_band_strips(polys, (100.0, 625.0), 4.0)
+
+
+@settings(max_examples=60, deadline=None)
+@given(st.data())
+def test_prop_windowed_strips_equal_full_raster_fixture(data):
+    polys, full = _fixture_baufeld()
+    _check_window(polys, (100.0, 625.0), 4.0, full, data.draw(_windows(full)))
+
+
+def test_windowed_strips_equal_full_raster_on_feature_bboxes():
+    """The production windows: zone_area_pieces passes each feature's bbox."""
+    from lagespark import fixtures
+
+    polys, full = _fixture_baufeld()
+    for w in fixtures.gruenflaeche_pdf()[["xmin", "ymin", "xmax", "ymax"]].itertuples(index=False):
+        _check_window(polys, (100.0, 625.0), 4.0, full, tuple(w))
+
+
+@st.composite
+def rect_hex_sets(draw):
+    polys = []
+    for _ in range(draw(st.integers(1, 3))):
+        cx, cy, r = draw(st.floats(0.0, 200.0)), draw(st.floats(0.0, 200.0)), draw(st.floats(2.0, 40.0))
+        if draw(st.booleans()):
+            ring = [[cx, cy], [cx + r, cy], [cx + r, cy + 0.7 * r], [cx, cy + 0.7 * r]]
+        else:
+            ring = [[cx + r * np.cos(a), cy + r * np.sin(a)] for a in np.arange(6) * np.pi / 3]
+        polys.append([np.array(ring)])
+    return polys
+
+
+@settings(max_examples=40, deadline=None)
+@given(rect_hex_sets(), st.sampled_from([1.5, 2.0, 3.7]), st.data())
+def test_prop_windowed_strips_equal_full_raster_random(polys, resolution, data):
+    full = geom.zone_band_strips(polys, (10.0, 35.0), resolution)
+    windows = [geom.ring_bbox(rings[0]) for rings in polys]
+    windows += [data.draw(_windows(full)) for _ in range(3)]
+    for w in windows:
+        _check_window(polys, (10.0, 35.0), resolution, full, w)
 
 
 @st.composite

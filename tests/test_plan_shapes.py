@@ -6,6 +6,7 @@ pruning on checkpointed stages."""
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
@@ -148,6 +149,10 @@ def test_overlay_join_cover_explosion_is_native(spark):
     p = plan_of(df, "simple")
     # exactly one Arrow UDF node (the exact-area kernel, general-pair branch)
     assert p.count("ArrowEvalPython") == 1
+    # fed by a round-robin exchange to ONE task per core: every Python-worker
+    # task costs a fixed start-up, so the kernel is not oversubscribed
+    m = re.search(r"Exchange (\w+)\((\d+)\)", p.split("ArrowEvalPython", 1)[1])
+    assert m.groups() == ("RoundRobinPartitioning", str(spark.sparkContext.defaultParallelism))
     assert "Generate explode" in p  # native cover explosion
     # the registered q68 is ALL-RECT input: with the round-8 data-adaptive
     # probe the kernel branch is elided entirely — zero Python nodes, pure
