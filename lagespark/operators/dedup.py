@@ -9,6 +9,9 @@ md5, groupBy) so they scale JVM-side with no Python worker in the path:
                       (shingle, perm) — min of fixed-width hex strings ==
                       numeric min, so the signature is portable SQL; band
                       keys bucket-join candidate pairs
+  banded_pairs      — the one pair-emission primitive (min-band dedup) under
+                      every LSH / pigeonhole pair finder
+  hamming_pairs     — SimHash/pHash pairs: pigeonhole chunks + bit_count
   simhash_expr      — n-bit SimHash as generated arithmetic (portable to the
                       DuckDB oracle dialect — no bitwise ops)
   ngram_jaccard_pairs — exact set-Jaccard over shingles for pair subsets
@@ -281,7 +284,7 @@ def band_keys_md5(
     with streaming ingest dedup (streaming.ops.dedup_stream_minhash passes
     spread=False and keep=('ts',)). The SQL mirror of the (sh, sig, keys)
     chain is band_keys_ctes_sql. all_keys=True additionally carries the
-    full band-key array as `_bks` (min-band pair dedup, _bucket_pairs).
+    full band-key array as `_bks` (min-band pair dedup, banded_pairs).
 
     PLAN-SIZE NOTE (round 8): the whole signature→band-key chain is ONE
     aggregate fold whose `finish` lambda emits the band-key array directly.
@@ -374,51 +377,74 @@ def minhash_pairs(
     signature. bands = perms / band_rows. Each doc explodes to one row per
     band key; the self-join runs per (band, key) bucket — at scale the key
     space is uniform (md5) so the shuffle partitions evenly."""
-    return _bucket_pairs(
+    return banded_pairs(
         band_keys_md5(df, id_col, text_col, perms, band_rows, n, all_keys=True),
-        id_col,
-        n_bands=perms // band_rows,
+        perms // band_rows,
     )
 
 
-def _bucket_pairs(keys: DataFrame, id_col: str, n_bands: int | None = None) -> DataFrame:
-    """(id, band, band_key) → distinct candidate pairs (a < b) sharing a
-    bucket, via a SELF-JOIN of the lazily-checkpointed key table.
+def banded_pairs(
+    keys: DataFrame,
+    n_bands: int,
+    right: DataFrame | None = None,
+    on: tuple[str, ...] = ("band", "band_key"),
+) -> DataFrame:
+    """THE pair-emission primitive of every banded pair finder (MinHash LSH,
+    SimHash/pHash pigeonhole chunks, sign-LSH sketches): key rows
+    `(id, band, band_key, _bks, *carry)` → candidate pairs
+    `(a, b, *carry_a, *carry_b)`, each pair EXACTLY ONCE. The id is the
+    FIRST column (each side may name it differently); `_bks` is the row's
+    full band-key array (`_bks[band] == band_key`); every other non-key
+    column is carry, suffixed `_a` / `_b` on output.
 
-    Why a self-join and not collect_list + double explode: a hot bucket of k
-    docs explodes k² pair rows out of ONE collect_list row — a single task
-    (real corpora have giant duplicate clusters; the harness documents have
-    a 2,699-doc bucket that serialized 7M rows through one thread). The
-    equi-join streams each key row independently, so hot-bucket output is
-    generated across ALL partitions holding those rows (broadcast probe at
-    this size; SMJ + AQE skew-split at cluster scale). The checkpoint makes
-    the (skinny — id + 2 keys) table compute its signature subplan ONCE for
-    both join sides.
+    Modes: `right=None` self-joins `keys` (pairs a < b); a `right` key
+    table makes it two-sided (pairs a != b, a from `keys`, b from
+    `right`). `on` names the join columns — a key that already packs its
+    band (sign-LSH's `t << 59 | bits` bucket) joins on itself alone.
 
-    Pair dedup (round 8): when the key table carries the full band-key
-    array (`_bks`, all_keys=True in band_keys_*) and the caller passes
-    `n_bands`, a pair is emitted ONLY from the FIRST band whose keys
-    collide — a pure map-side filter on the join output, so the quadratic
-    candidate stream never shuffles again (the old `.distinct()`
-    hash-aggregated + exchanged up-to-bands× the pair volume; guide §2.4
-    "remove shuffles outright"). The filter is a flat OR chain of
+    PRECONDITION: ids are unique within each side (the corpus contract;
+    the DuckDB oracle's GROUP BY doc_id signature assumes the same). A
+    repeated id would emit its pairs once per copy.
+
+    Why a self-join and not collect_list + double explode: a hot bucket of
+    k rows explodes k² pair rows out of ONE collect_list row — a single
+    task (the harness documents have a 2,699-doc bucket that serialized 7M
+    rows through one thread). The equi-join streams each key row
+    independently, so hot-bucket output is generated across ALL partitions
+    holding those rows. The self-join's LAZY checkpoint makes the skinny
+    key table compute its signature subplan ONCE for both sides.
+
+    Pair dedup is MIN-BAND (round 8): a pair is emitted ONLY from the
+    FIRST band whose keys agree — a pure map-side filter on the join
+    output, so the quadratic candidate stream never shuffles again (a
+    post-join distinct hash-aggregated + exchanged up-to-bands× the pair
+    volume). Bucket membership is DEFINED by band-key equality, so checking
+    earlier bands' keys reproduces exactly the distinct pair set — HERO's
+    and the PBSM reference-cell rule's invariant: every pair belongs to
+    one partition of the key space. The filter is a flat OR chain of
     element_at comparisons — NOT slice/zip_with/exists, which allocate two
     sliced arrays per joined row and measured SLOWER than the distinct it
     replaces (sf0.1 A/B: distinct ~1.5 s, HOF filter ~4.8 s, element_at
-    chain ~0.8 s). Join-bucket membership is DEFINED by band_key equality,
-    so checking earlier bands' keys reproduces exactly the distinct pair
-    set — given unique doc ids (the corpus contract; the DuckDB oracle's
-    GROUP BY doc_id signature assumes the same). Without `_bks`/`n_bands`
-    the distinct fallback remains."""
-    keys = keys.localCheckpoint(eager=False)
-    has_all = "_bks" in keys.columns and n_bands is not None
-    extra_a = [F.col("_bks").alias("_ka")] if has_all else []
-    extra_b = [F.col("_bks").alias("_kb")] if has_all else []
-    a = keys.select(F.col(id_col).alias("a"), "band", "band_key", *extra_a)
-    b = keys.select(F.col(id_col).alias("b"), "band", "band_key", *extra_b)
-    j = a.join(b, ["band", "band_key"]).filter(F.col("a") < F.col("b"))
-    if not has_all:
-        return j.select("a", "b").distinct()
+    chain ~0.8 s)."""
+    if right is None:
+        keys = keys.localCheckpoint(eager=False)
+    skip = {"band", *on, "_bks"}
+    carry = [c for c in keys.columns[1:] if c not in skip]
+
+    def side(df: DataFrame, s: str, with_band: bool) -> DataFrame:
+        return df.select(
+            F.col(df.columns[0]).alias(s),
+            *(["band"] if with_band and "band" not in on else []),
+            *on,
+            F.col("_bks").alias(f"_k{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    a = side(keys, "a", True)
+    b = side(keys if right is None else right, "b", False)
+    j = a.join(b, list(on)).filter(
+        (F.col("a") < F.col("b")) if right is None else (F.col("a") != F.col("b"))
+    )
     # band is 0-based; element_at is 1-based, so _ka[i] is band i-1's key:
     # row at band b collides earlier iff any i <= b has _ka[i] == _kb[i]
     earlier = F.lit(False)
@@ -426,7 +452,9 @@ def _bucket_pairs(keys: DataFrame, id_col: str, n_bands: int | None = None) -> D
         earlier = earlier | (
             (F.col("band") >= i) & (F.element_at("_ka", i) == F.element_at("_kb", i))
         )
-    return j.filter(~earlier).select("a", "b")
+    return j.filter(~earlier).select(
+        "a", "b", *[f"{c}_a" for c in carry], *[f"{c}_b" for c in carry]
+    )
 
 
 def minhash_pairs_fast(
@@ -450,10 +478,9 @@ def minhash_pairs_fast(
     one codegen projection per document, no shingle-row explosion and no
     groupBy shuffle; the only shuffle in the whole operator is the (band,
     band_key) bucket groupBy, whose keys are uniform int64."""
-    return _bucket_pairs(
+    return banded_pairs(
         band_keys_fast(df, id_col, text_col, perms, band_rows, n, all_keys=True),
-        id_col,
-        n_bands=perms // band_rows,
+        perms // band_rows,
     )
 
 
@@ -472,7 +499,7 @@ def band_keys_fast(
     signature path — the per-doc half of minhash_pairs_fast, shared with
     streaming ingest dedup (keep/spread semantics as band_keys_md5).
     all_keys=True carries the full band-key array as `_bks` (min-band pair
-    dedup, _bucket_pairs).
+    dedup, banded_pairs).
 
     ONE aggregate pass with a `perms`-field struct accumulator instead of
     `perms` separate transform+array_min projections: the latter
@@ -857,70 +884,79 @@ def minhash_jaccard_pairs(
     )
 
 
+def pigeonhole_keys(
+    df: DataFrame,
+    sketch_col: str,
+    id_col: str,
+    bits: int,
+    n_bands: int,
+    keep: tuple[str, ...] = (),
+    all_keys: bool = False,
+) -> DataFrame:
+    """(id, band, band_key bigint, *keep): the `bits`-bit integer sketch
+    split into `n_bands` disjoint chunks (widths differ by at most one bit,
+    band 0 = the low bits) — any two sketches within hamming < n_bands
+    agree on at least one chunk. The per-row half of hamming_pairs, shared
+    with streaming image ingest dedup (the 64-bit pHash in 4×16-bit bands,
+    streaming/ops.dedup_stream_phash). all_keys=True carries the chunk
+    array as `_bks` (banded_pairs' min-band dedup)."""
+    base, extra = divmod(bits, n_bands)
+    widths = [base + (1 if b < extra else 0) for b in range(n_bands)]
+    chunks = F.array(
+        *[
+            F.shiftright(F.col(sketch_col), sum(widths[:b]))
+            .bitwiseAND(F.lit((1 << widths[b]) - 1))
+            .cast("bigint")
+            for b in range(n_bands)
+        ]
+    )
+    # posexplode_OUTER: the array is never empty, and the plain form would
+    # infer a size() filter below the exchange (see band_keys_md5)
+    return df.select(
+        F.col(id_col), chunks.alias("_bks"), *[F.col(c) for c in keep]
+    ).select(
+        id_col,
+        F.posexplode_outer("_bks").alias("band", "band_key"),
+        *(["_bks"] if all_keys else []),
+        *keep,
+    )
+
+
 def hamming_pairs(
     df: DataFrame,
     sketch_col: str,
     id_col: str = "doc_id",
     bits: int = 16,
     max_hamming: int = 2,
+    n_bands: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (a, b, hamming) over an integer sketch WITHOUT an
     all-pairs join: pigeonhole banding. Split the `bits`-bit sketch into
-    max_hamming+1 disjoint chunks — any pair within hamming ≤ max_hamming
-    must agree on at least one chunk — equi-join on (band, chunk_value),
-    refine with native bit_count(xor). Same shape as
-    image_ops.phash_neardup_pairs; pure Catalyst end-to-end.
+    `n_bands` (default max_hamming+1) disjoint chunks — any pair within
+    hamming ≤ n_bands-1 must agree on at least one chunk — pair candidates
+    with banded_pairs, refine with native bit_count(xor) ≤ max_hamming.
+    Pure Catalyst end-to-end; SimHash text pairs (q82b) and pHash image
+    pairs (image_ops.phash_neardup_pairs) both run it.
+
+    With the default n_bands the result is EXACTLY the all-pairs set. Fewer
+    bands (pHash: 4×16 bits at max_hamming=6) trade recall above hamming
+    n_bands-1 for smaller candidate buckets.
 
     Scale: the shuffle key is (band, chunk) — uniform for hash-like
-    sketches, so buckets stay small and the in-bucket pair expansion is
-    bounded. Pairs come from a self-join of the lazily-checkpointed key
-    table (not collect_list + double explode): a hot bucket — e.g. many
-    byte-identical images sharing one sketch — would otherwise emit its k²
-    pair rows from a single task (see _bucket_pairs); the checkpoint keeps
-    the sketch subplan computed once for both sides."""
-    n_bands = max_hamming + 1
-    base, extra = divmod(bits, n_bands)
-    widths = [base + (1 if b < extra else 0) for b in range(n_bands)]
-    offsets = [sum(widths[:b]) for b in range(n_bands)]
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col(sketch_col), offsets[b])
-                .bitwiseAND(F.lit((1 << widths[b]) - 1))
-                .alias("key"),
-            )
-            for b in range(n_bands)
-        ]
+    sketches, so buckets stay small; a hot bucket (many byte-identical
+    images sharing one sketch) spreads over the join's partitions (see
+    banded_pairs). The sketch rides the key table as carry for the refine."""
+    n_bands = n_bands or max_hamming + 1
+    keys = pigeonhole_keys(
+        df, sketch_col, id_col, bits, n_bands, keep=(sketch_col,), all_keys=True
     )
-    keyed = df.select(
-        F.col(id_col), F.col(sketch_col).alias("_sk"), F.explode(bands).alias("bk")
-    ).select(
-        id_col, "_sk", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    ).localCheckpoint(eager=False)
-    a = keyed.select(F.col(id_col).alias("a"), F.col("_sk").alias("_ska"), "band", "key")
-    b = keyed.select(F.col(id_col).alias("b"), F.col("_sk").alias("_skb"), "band", "key")
-    pairs = a.join(b, ["band", "key"]).filter(F.col("a") < F.col("b"))
-    ham = F.bit_count(F.col("_ska").bitwiseXOR(F.col("_skb")))
-    # min-band pair dedup (round 8, same construction as _bucket_pairs): a
-    # pair is emitted ONLY from the first chunk that agrees — the earlier
-    # chunks are recomputable from the carried sketches, so the dedup is a
-    # map-side filter and the pair stream never shuffles (the old
-    # .distinct() exchanged it). Unique ids assumed (corpus contract).
-    def chunk(col: str, b: int):
-        return F.shiftright(F.col(col), offsets[b]).bitwiseAND(
-            F.lit((1 << widths[b]) - 1)
-        )
-
-    earlier = F.lit(False)
-    for bprev in range(n_bands - 1):
-        earlier = earlier | (
-            (F.col("band") > bprev) & (chunk("_ska", bprev) == chunk("_skb", bprev))
-        )
+    ham = F.bit_count(
+        F.col(f"{sketch_col}_a").bitwiseXOR(F.col(f"{sketch_col}_b"))
+    ).cast("int")
     return (
-        pairs.withColumn("hamming", ham.cast("int"))
+        banded_pairs(keys, n_bands)
+        .withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
-        .filter(~earlier)
         .select("a", "b", "hamming")
     )
 

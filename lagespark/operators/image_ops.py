@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from lagespark import fixtures
 from lagespark.image import codecs
+from lagespark.operators import dedup
 
 IMG_BATCH = 1024
 
@@ -307,80 +308,14 @@ def generate_with_neardups(
     return spark.range(0, n, 1, partitions).mapInPandas(gen, IMAGES_SCHEMA)
 
 
-def phash_band_keys(
-    images: DataFrame,
-    id_col: str = "image_id",
-    phash_col: str = "phash",
-    keep: tuple[str, ...] = (),
-) -> DataFrame:
-    """(id, band, band_key, *keep): the 64-bit pHash split into 4×16-bit
-    pigeonhole bands — any pair within hamming ≤ 3 shares at least one
-    band key. The per-image half of phash_neardup_pairs' banding, shared
-    with streaming image ingest dedup (streaming/ops.dedup_stream_phash),
-    mirroring how dedup.band_keys_fast feeds both the batch pair finder
-    and dedup_stream_minhash."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col(phash_col), 16 * b)
-                .bitwiseAND(F.lit(0xFFFF))
-                .cast("bigint")
-                .alias("band_key"),
-            )
-            for b in range(4)
-        ]
-    )
-    return images.select(
-        F.col(id_col), F.explode(bands).alias("bk"), *[F.col(c) for c in keep]
-    ).select(
-        id_col,
-        F.col("bk.band").alias("band"),
-        F.col("bk.band_key").alias("band_key"),
-        *keep,
-    )
-
-
 def phash_neardup_pairs(images: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """pHash near-duplicate pairs: band the 64-bit hash into 4×16-bit keys
-    (pigeonhole: any pair within hamming ≤ 3 shares a band; our injected
-    dups are ≤ 2), bucket-join candidates, refine with native
+    """pHash near-duplicate pairs (a, b, hamming): dedup.hamming_pairs over
+    the 64-bit hash in 4×16-bit pigeonhole bands (any pair within hamming
+    ≤ 3 shares a band; our injected dups are ≤ 2), refined with native
     bit_count(xor) ≤ max_hamming. Everything after the hash is pure
     Catalyst — no Python in the pair path."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("phash"), 16 * b)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("key"),
-            )
-            for b in range(4)
-        ]
-    )
-    keyed = images.select("image_id", "phash", F.explode(bands).alias("bk")).select(
-        "image_id", "phash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    buckets = (
-        keyed.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("image_id", "phash")).alias("members"))
-        .filter(F.size("members") > 1)
-    )
-    pairs = (
-        buckets.select(F.explode("members").alias("a"), F.col("members"))
-        .select("a", F.explode("members").alias("b"))
-        .filter(F.col("a.image_id") < F.col("b.image_id"))
-    )
-    ham = F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-    return (
-        pairs.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            F.col("a.image_id").alias("a"),
-            F.col("b.image_id").alias("b"),
-            "hamming",
-        )
-        .distinct()
+    return dedup.hamming_pairs(
+        images, "phash", id_col="image_id", bits=64, max_hamming=max_hamming, n_bands=4
     )
 
 
@@ -390,8 +325,6 @@ def phash_dedup_corpus(images: DataFrame, max_hamming: int = 6) -> DataFrame:
     each cluster's lexicographically-minimum image_id + all unclustered
     images. The image table (payloads included) is only ever anti-joined —
     it never shuffles its binary column through the pair machinery."""
-    from lagespark.operators import dedup
-
     pairs = phash_neardup_pairs(images, max_hamming).select("a", "b")
     comp = dedup.duplicate_components(pairs)
     losers = comp.filter(F.col("doc") != F.col("component")).select(

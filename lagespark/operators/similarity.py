@@ -36,6 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from lagespark.operators.dedup import banded_pairs
 from lagespark.operators.spatial import _repartition_for_kernel
 
 _NN_T = ArrayType(
@@ -53,6 +54,58 @@ def _normalized(mat: np.ndarray) -> np.ndarray:
     n = np.linalg.norm(mat, axis=1, keepdims=True)
     n[n == 0] = 1.0
     return mat / n
+
+
+def _cosine_udf(round_to: int):
+    """Row-wise exact cosine of two embedding columns, rounded to
+    `round_to` digits — the refine step of every ANN/near-dup path.
+    Nondeterministic so a `cos >= threshold` filter is not pushed below
+    the kernel repartition, which evaluated the UDF twice."""
+
+    @F.pandas_udf(DoubleType())
+    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
+        ma = _normalized(np.stack(a.to_numpy()).astype(np.float64))
+        mb = _normalized(np.stack(b.to_numpy()).astype(np.float64))
+        return pd.Series(np.round(np.sum(ma * mb, axis=1), round_to))
+
+    return cos.asNondeterministic()
+
+
+def _sign_sketch_udf(planes: int, tables: int, dim: int, seed: int):
+    """Seeded random-hyperplane sketches: one int64 bucket per table,
+    `t << 59 | sign bits`, so a bucket value names its table too."""
+    if tables > 16 or planes > 59:
+        raise ValueError("sketch key packs t<<59 | planes: tables<=16, planes<=59")
+    pl = np.random.default_rng(seed).normal(size=(tables, planes, dim))
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def sketches(v: pd.Series) -> pd.Series:
+        m = np.stack(v.to_numpy()).astype(np.float64)
+        keys = []
+        for t in range(tables):
+            signs = (m @ pl[t].T) > 0  # (B, planes)
+            # t << 59 (not 60): fits int64 for tables<=16 (15<<59 < 2^63) and
+            # stays disjoint from the plane bits; t<<60 overflows for t>=8
+            # (NumPy >=2.0 raises OverflowError in the executor UDF)
+            val = np.full(len(m), t << 59, dtype=np.int64)
+            for j in range(planes):
+                val |= signs[:, j].astype(np.int64) << j
+            keys.append(val)
+        return pd.Series(np.stack(keys, axis=1).tolist())
+
+    return sketches
+
+
+def _sign_keys(df: DataFrame, id_col: str, vec_col: str, sketches) -> DataFrame:
+    """(id, band, bucket, _bks): banded_pairs key rows over the sketch
+    array — ONLY the id and the sketch longs reach the bucket exchange,
+    never the vector (at scale it would replicate `tables`× per side). The
+    sketch UDF evaluates once per row, below the posexplode_OUTER (the
+    plain form would infer a size(sketches(v)) > 0 filter — a second UDF
+    evaluation)."""
+    return df.select(F.col(id_col), sketches(F.col(vec_col)).alias("_bks")).select(
+        id_col, F.posexplode_outer("_bks").alias("band", "bucket"), "_bks"
+    )
 
 
 # Hard ceiling on rows collected for the brute-force/exact paths. At D=64
@@ -184,53 +237,18 @@ def cosine_pairs_lsh(
     bucket occupancy) — candidate volume per table is Σ k_bucket², so
     buckets must stay small as N grows. Injected-duplicate recall is
     asserted in tests."""
-    if tables > 16 or planes > 59:
-        raise ValueError("sketch key packs t<<59 | planes: tables<=16, planes<=59")
-    rng = np.random.default_rng(seed)
-    pl = rng.normal(size=(tables, planes, dim))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sketches(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        keys = []
-        for t in range(tables):
-            signs = (m @ pl[t].T) > 0
-            # t << 59 (not 60): fits int64 for tables<=16 (15<<59 < 2^63) and
-            # stays disjoint from the plane bits; t<<60 overflows for t>=8
-            # (NumPy >=2.0 raises OverflowError in the executor UDF)
-            val = np.full(len(m), t << 59, dtype=np.int64)
-            for j in range(planes):
-                val |= signs[:, j].astype(np.int64) << j
-            keys.append(val)
-        return pd.Series(np.stack(keys, axis=1).tolist())
-
-    # skinny bucket join: ids only through the sketch explosion + self-join
-    # + dedup; embedding vectors join back per side AFTER dedup (one row per
-    # pair, not one per shared bucket)
-    keyed = df.select(F.col(id_col), F.col(vec_col)).withColumn(
-        "bucket", F.explode(sketches(F.col(vec_col)))
-    )
-    a = keyed.select(F.col(id_col).alias("a"), "bucket")
-    b = keyed.select(F.col(id_col).alias("b"), "bucket")
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("a") < F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    sketches = _sign_sketch_udf(planes, tables, dim, seed)
+    # skinny bucket self-join: ids + sketch longs through the bucket join;
+    # embedding vectors join back per side AFTER the min-band dedup (one
+    # row per pair, not one per shared bucket)
+    pairs = banded_pairs(_sign_keys(df, id_col, vec_col, sketches), tables, on=("bucket",))
     vecs = df.select(F.col(id_col), F.col(vec_col))
     cand = pairs.join(
         vecs.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va")), "a"
     ).join(vecs.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb")), "b")
     cand = _repartition_for_kernel(cand)
-
-    @F.pandas_udf(DoubleType())
-    def cos(x: pd.Series, y: pd.Series) -> pd.Series:
-        mx = _normalized(np.stack(x.to_numpy()).astype(np.float64))
-        my = _normalized(np.stack(y.to_numpy()).astype(np.float64))
-        return pd.Series(np.round(np.sum(mx * my, axis=1), round_to))
-
     return (
-        cand.withColumn("cos", cos(F.col("va"), F.col("vb")))
+        cand.withColumn("cos", _cosine_udf(round_to)(F.col("va"), F.col("vb")))
         .filter(F.col("cos") >= threshold)
         .select("a", "b", "cos")
     )
@@ -349,17 +367,11 @@ def ivf_topk(
     )
     cand = q.join(t, "bucket").filter(F.col("qid") != F.col("nn_id"))
 
-    @F.pandas_udf(DoubleType())
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = _normalized(np.stack(a.to_numpy()).astype(np.float64))
-        mb = _normalized(np.stack(b.to_numpy()).astype(np.float64))
-        return pd.Series(np.round(np.sum(ma * mb, axis=1), 6))
-
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nn_id"))
     return (
-        cand.withColumn("cos", cos(F.col("qv"), F.col("tv")))
+        cand.withColumn("cos", _cosine_udf(6)(F.col("qv"), F.col("tv")))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "nn_id", "cos", "rank")
@@ -502,15 +514,9 @@ def pq_topk(
     tv = targets.select(F.col(id_col).alias("nn_id"), F.col(vec_col).alias("tv"))
     pairs = short.join(F.broadcast(qv), "qid").join(tv, "nn_id")
 
-    @F.pandas_udf(DoubleType())
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = _normalized(np.stack(a.to_numpy()).astype(np.float64))
-        mb = _normalized(np.stack(b.to_numpy()).astype(np.float64))
-        return pd.Series(np.round(np.sum(ma * mb, axis=1), 6))
-
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nn_id"))
     return (
-        pairs.withColumn("cos", cos(F.col("qv"), F.col("tv")))
+        pairs.withColumn("cos", _cosine_udf(6)(F.col("qv"), F.col("tv")))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "nn_id", "cos", "rank")
@@ -541,57 +547,30 @@ def lsh_topk(
     (bucket count = 2^planes caps per-bucket candidate volume) and `tables`
     together; clustered real-world embeddings reach the same recall with
     far fewer tables."""
-    if tables > 16 or planes > 59:
-        raise ValueError("sketch key packs t<<59 | planes: tables<=16, planes<=59")
-    rng = np.random.default_rng(seed)
-    pl = rng.normal(size=(tables, planes, dim))
-
-    out_t = ArrayType(LongType())
-
-    @F.pandas_udf(out_t)
-    def sketches(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy()).astype(np.float64)
-        keys = []
-        for t in range(tables):
-            signs = (m @ pl[t].T) > 0  # (B, planes)
-            # t << 59: see cosine_pairs_lsh — t<<60 overflows int64 for t>=8
-            val = np.full(len(m), t << 59, dtype=np.int64)
-            for j in range(planes):
-                val |= signs[:, j].astype(np.int64) << j
-            keys.append(val)
-        return pd.Series(np.stack(keys, axis=1).tolist())
-
-    # skinny bucket join (same shape as cosine_pairs_lsh): only (id, bucket)
-    # rides the ×`tables` explosion through the bucket-join shuffle — at scale
-    # the embedding vectors would otherwise be replicated `tables`× on BOTH
-    # sides of the exchange. Vectors join back per candidate pair AFTER the
-    # (qid, nn_id) dedup, one row per pair.
+    sketches = _sign_sketch_udf(planes, tables, dim, seed)
+    # skinny two-sided bucket join (same shape as cosine_pairs_lsh): only
+    # (id, bucket, sketch longs) ride the ×`tables` explosion through the
+    # bucket-join shuffle. Vectors join back per candidate pair AFTER the
+    # min-band dedup, one row per pair.
     qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
     tv = targets.select(F.col(id_col).alias("nn_id"), F.col(vec_col).alias("tv"))
-    qk = qv.withColumn("bucket", F.explode(sketches(F.col("qv")))).select(
-        "qid", "bucket"
-    )
-    tk = tv.withColumn("bucket", F.explode(sketches(F.col("tv")))).select(
-        "nn_id", "bucket"
-    )
-    pairs = (
-        qk.join(tk, "bucket")
-        .filter(F.col("qid") != F.col("nn_id"))
-        .dropDuplicates(["qid", "nn_id"])
-    )
+    # the broadcast bucket join streams the query keys: spread them (a
+    # small query set scans as ONE partition) so the pair expansion and the
+    # vector join-back run on every core, not in the scan's single task
+    qk = _sign_keys(qv, "qid", "qv", sketches)
+    pairs = banded_pairs(
+        qk.repartition(qk.sparkSession.sparkContext.defaultParallelism),
+        tables,
+        right=_sign_keys(tv, "nn_id", "tv", sketches),
+        on=("bucket",),
+    ).select(F.col("a").alias("qid"), F.col("b").alias("nn_id"))
     cand = _repartition_for_kernel(pairs.join(qv, "qid").join(tv, "nn_id"))
-
-    @F.pandas_udf(DoubleType())
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = _normalized(np.stack(a.to_numpy()).astype(np.float64))
-        mb = _normalized(np.stack(b.to_numpy()).astype(np.float64))
-        return pd.Series(np.round(np.sum(ma * mb, axis=1), 6))
 
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("nn_id"))
     return (
-        cand.withColumn("cos", cos(F.col("qv"), F.col("tv")))
+        cand.withColumn("cos", _cosine_udf(6)(F.col("qv"), F.col("tv")))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("qid", "nn_id", "cos", "rank")

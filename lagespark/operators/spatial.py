@@ -1132,7 +1132,7 @@ def _mask_cover(
     # concurrent threads at action start — a lazy checkpoint races there
     # and recomputes the cover once per thread (measured: q82 warm
     # 12 → 18-27 s with run-to-run swing; same race class as
-    # dedup._bucket_pairs / components). No repartition (round 8): it
+    # dedup.banded_pairs / components). No repartition (round 8): it
     # re-shuffled the payload-carrying exploded cover for nothing — AQE's
     # parallelismFirst layout stands, downstream joins re-shuffle anyway,
     # and the kernel mask branch re-spreads via _repartition_for_kernel.

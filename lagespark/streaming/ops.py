@@ -110,62 +110,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """running_user_totals on the Spark 4 transformWithStateInPandas API
-    (SURVEY §2.9 s07 names it as the successor of applyInPandasWithState):
-    same semantics — per-user (n, total) value state, one updated row per
-    user per micro-batch. Requires the RocksDB state store provider (the
-    only provider transformWithState supports); tests set it on the session.
-    Parity with running_user_totals is asserted in tests/test_streaming.py.
-
-    ENVIRONMENT SEAM: PySpark's transformWithState driver worker speaks its
-    state protocol over `google.protobuf`, which this sandbox does not ship
-    (SURVEY.md §0 — no pip installs). Without it the query would crash at
-    init inside the JVM-spawned worker, so we fail fast here with a clear
-    error; on any cluster with protobuf installed this function is fully
-    live (the parity test runs there)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as ex:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the google.protobuf package "
-            "(PySpark's transform_with_state driver worker imports it); not "
-            "available in this sandbox — use running_user_totals "
-            "(applyInPandasWithState, same semantics) instead"
-        ) from ex
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._agg = handle.getValueState("agg", "n bigint, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._agg.exists():
-                n, total = self._agg.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._agg.update((n, float(total)))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n": [n], "total": [round(total, 2)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType="user_id bigint, n bigint, total double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def session_totals_with_timeout(events: DataFrame, gap_ms: int = 300_000) -> DataFrame:
     """Custom stateful sessionization with EVENT-TIME TIMEOUT
     (applyInPandasWithState + EventTimeTimeout): per-user running (n, total,
@@ -373,10 +317,10 @@ def ingest_claims_batch_phash(
     claims over the 4×16-bit pHash pigeonhole bands (same window semantics
     as ingest_claims_batch — earliest (order_col, id) row owns each band
     key, later holders claim it, self-claims filtered)."""
-    from lagespark.operators import image_ops
+    from lagespark.operators import dedup
 
     keep = (order_col,) if order_col else ()
-    keys = image_ops.phash_band_keys(images, id_col, phash_col, keep=keep)
+    keys = dedup.pigeonhole_keys(images, phash_col, id_col, 64, 4, keep=keep)
     return _claims_batch_from_keys(keys, id_col, order_col)
 
 
@@ -427,9 +371,8 @@ def dedup_stream_minhash(
     (dropDuplicatesWithinWatermark's shape): a duplicate re-ingested
     after `retention_s` of its cluster being quiet becomes a new owner
     instead of claiming. None (default) keeps the unbounded
-    exact-forever semantics; clusters that have it should prefer
-    dedup_stream_minhash_tws, whose per-KEY MapState only round-trips
-    TOUCHED keys (no whole-map serialize at all).
+    exact-forever semantics (a per-KEY MapState that round-trips only
+    TOUCHED keys is DESIGN_DECISIONS #31).
     Ownership is FIRST-ARRIVAL: within a micro-batch rows are applied in
     (ts, id) order (deterministic under any partitioning of one batch),
     and across batches the earlier BATCH wins regardless of ts — so the
@@ -625,9 +568,9 @@ def dedup_stream_phash(
     ingest_claims_batch_phash(order_col="ts") under monotone ingest
     (test-pinned, same contract as q104)."""
     imgs = images.withColumn("ts", F.col("ts").cast("timestamp"))
-    from lagespark.operators import image_ops
+    from lagespark.operators import dedup
 
-    keys = image_ops.phash_band_keys(imgs, id_col, phash_col, keep=("ts",))
+    keys = dedup.pigeonhole_keys(imgs, phash_col, id_col, 64, 4, keep=("ts",))
     return _claims_stream(
         keys,
         id_col,
@@ -636,101 +579,4 @@ def dedup_stream_phash(
         output_mode,
         retention_s,
         reorder_s,
-    )
-
-
-def dedup_stream_minhash_tws(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    perms: int = 8,
-    band_rows: int = 2,
-    n: int = 3,
-    state_buckets: int = 256,
-    output_mode: str = "Update",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """dedup_stream_minhash on the Spark 4 transformWithStateInPandas API —
-    the value-state path that REMOVES the whole-map serialize-per-batch
-    cost (VERDICT r6 wrong #1): the grouping key stays the super-bucket
-    (so Python dispatch is still O(buckets) per batch), but the
-    (band, band_key) → owner map lives in a per-bucket RocksDB MapState
-    and only the keys TOUCHED by the batch round-trip through
-    getValue/updateValue. Per-batch cost is O(batch keys), flat for the
-    stream's whole life — no retention trade needed; `ttl_ms` optionally
-    expires idle entries via the state store's native TTL (processing
-    time) to ALSO bound state size.
-
-    Same first-arrival semantics as dedup_stream_minhash: rows apply in
-    (ts, id) order within a batch, earlier batches win across batches, a
-    doc never claims itself. Claims equal ingest_claims_batch(
-    order_col="ts") under monotone ingest (parity test auto-skips in
-    this sandbox and runs wherever protobuf exists).
-
-    ENVIRONMENT SEAM (same as running_user_totals_tws): PySpark's
-    transformWithState worker needs `google.protobuf`, absent in this
-    sandbox — fail fast with a clear error; fully live on real clusters
-    (requires the RocksDB state store provider)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as ex:
-        raise RuntimeError(
-            "transformWithStateInPandas requires the google.protobuf "
-            "package (PySpark's transform_with_state worker imports it); "
-            "not available in this sandbox — use dedup_stream_minhash "
-            "(applyInPandasWithState; same semantics, whole-map state "
-            "serialization bounded via retention_s) instead"
-        ) from ex
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from lagespark.operators import dedup
-
-    docs = docs.withColumn("ts", F.col("ts").cast("timestamp"))
-    keys = dedup.band_keys_fast(
-        docs, id_col, text_col, perms, band_rows, n, keep=("ts",), spread=False
-    ).withColumn(
-        "bucket",
-        F.pmod(F.xxhash64(F.col("band"), F.col("band_key")), F.lit(state_buckets)),
-    )
-    id_t = docs.schema[id_col].dataType.simpleString()
-
-    class BucketOwners(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._owners = handle.getMapState(
-                "owners",
-                "band int, band_key bigint",
-                f"owner {id_t}",
-                ttlDurationMs=ttl_ms,
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            batch = pd.concat(list(rows), ignore_index=True)
-            batch = batch.sort_values(["ts", id_col], kind="mergesort")
-            out_id, out_band, out_owner = [], [], []
-            # only the TOUCHED keys hit the state store — no whole-map scan
-            for r in batch.itertuples(index=False):
-                rid = getattr(r, id_col)
-                k = (int(r.band), int(r.band_key))
-                cur = self._owners.getValue(k)
-                if cur is None:
-                    self._owners.updateValue(k, (rid,))
-                elif cur[0] != rid:
-                    out_id.append(rid)
-                    out_band.append(r.band)
-                    out_owner.append(cur[0])
-            yield pd.DataFrame(
-                {id_col: out_id, "band": out_band, "dup_of": out_owner}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return keys.groupBy("bucket").transformWithStateInPandas(
-        BucketOwners(),
-        outputStructType=f"{id_col} {id_t}, band int, dup_of {id_t}",
-        outputMode=output_mode,
-        timeMode="None",
     )

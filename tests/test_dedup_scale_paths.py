@@ -7,13 +7,18 @@ the oracle-portable md5 path."""
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from lagespark import harness
 from lagespark import harness2  # noqa: F401  (registers the dedup queries)
+from lagespark import harness3  # noqa: F401  (registers the image queries)
+from lagespark.operators.dedup import banded_pairs
 
 SF = "/root/testdata/sf0.001"
 
@@ -232,3 +237,151 @@ def test_hamming_pairs_matches_bruteforce_params(spark, bits, maxh):
         .collect()
     }
     assert banded == naive
+
+
+# ---------------------------------------------------------------------------
+# banded_pairs: the one pair-emission primitive
+# ---------------------------------------------------------------------------
+
+_STR_IDS = st.text("abcdefghijklmnopqrstuvwxyz0123456789", min_size=1, max_size=6)
+_LONG_IDS = st.integers(min_value=-(2**62), max_value=2**62)
+
+
+@st.composite
+def _key_tables(draw):
+    """One or two key tables over the same band count. Band keys come from a
+    3-value alphabet so pairs collide in several bands; `hot` puts every row
+    of both sides in ONE band-0 bucket. Ids are unique per side — the
+    helper's precondition — and may overlap across sides."""
+    n_bands = draw(st.integers(min_value=1, max_value=4))
+    ids = draw(st.sampled_from([_LONG_IDS, _STR_IDS]))
+    hot = draw(st.booleans())
+
+    def side():
+        rows = draw(st.lists(ids, min_size=0, max_size=12, unique=True))
+        keys = draw(
+            st.lists(
+                st.lists(st.integers(0, 2), min_size=n_bands, max_size=n_bands),
+                min_size=len(rows),
+                max_size=len(rows),
+            )
+        )
+        return {i: ([0] + k[1:]) if hot else k for i, k in zip(rows, keys)}
+
+    return n_bands, side(), side()
+
+
+def _keys_df(spark, table, string_ids):
+    """(id, band, band_key, _bks, w): the helper's input shape, carrying a
+    per-id payload `w` to check carry columns follow their id."""
+    rows = [
+        (i, b, k, bks, f"w{i}")
+        for i, bks in table.items()
+        for b, k in enumerate(bks)
+    ]
+    id_t = "string" if string_ids else "bigint"
+    return spark.createDataFrame(
+        rows, f"id {id_t}, band int, band_key bigint, _bks array<bigint>, w string"
+    )
+
+
+def _brute_pairs(left, right, self_join):
+    return {
+        (x, y)
+        for x, kx in left.items()
+        for y, ky in right.items()
+        if (x < y if self_join else x != y) and any(p == q for p, q in zip(kx, ky))
+    }
+
+
+def _check_banded(got, want):
+    pairs = [(r.a, r.b) for r in got]
+    assert len(pairs) == len(set(pairs)), "a pair was emitted more than once"
+    assert set(pairs) == want
+    assert all(r.w_a == f"w{r.a}" and r.w_b == f"w{r.b}" for r in got)
+
+
+def test_banded_pairs_states_unique_id_precondition():
+    assert "ids are unique within each side" in banded_pairs.__doc__
+
+
+@settings(
+    max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+@given(_key_tables())
+def test_banded_pairs_self_join_matches_bruteforce(spark, tables):
+    n_bands, left, _ = tables
+    string_ids = any(isinstance(i, str) for i in left)
+    got = banded_pairs(_keys_df(spark, left, string_ids), n_bands).collect()
+    _check_banded(got, _brute_pairs(left, left, self_join=True))
+
+
+@settings(
+    max_examples=20, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+@given(_key_tables())
+def test_banded_pairs_two_sided_matches_bruteforce(spark, tables):
+    n_bands, left, right = tables
+    string_ids = any(isinstance(i, str) for i in (*left, *right))
+    got = banded_pairs(
+        _keys_df(spark, left, string_ids),
+        n_bands,
+        right=_keys_df(spark, right, string_ids),
+    ).collect()
+    _check_banded(got, _brute_pairs(left, right, self_join=False))
+
+
+def test_banded_pairs_hot_bucket(spark):
+    """Every id shares one key in every band: all k(k-1)/2 pairs, once each."""
+    table = {i: [7, 7, 7] for i in range(30)}
+    got = banded_pairs(_keys_df(spark, table, False), 3).collect()
+    _check_banded(got, _brute_pairs(table, table, self_join=True))
+    assert len(got) == 30 * 29 // 2
+
+
+_PAIR_QUERIES = [
+    "q72-dedup-minhash-lsh",
+    "q72b-dedup-minhash-fast",
+    "q82b-dedup-simhash-pairs",
+    "q74b-dedup-embed-cosine-lsh",
+    "q76-ann-lsh",
+    "q85-img-phash-dedup",
+]
+_BUCKET_JOIN = re.compile(r"Join \[(band|bucket)#")
+
+
+def _bucket_join_consumers(df) -> list[str | None]:
+    """Node name of the first operator above each (band | bucket) equi-join
+    that is not a Project or Filter (None: the join feeds the output)."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.initialPlan()
+    found = []
+
+    def walk(node, above):
+        if "Join" in node.nodeName() and _BUCKET_JOIN.search(node.simpleString(50)):
+            found.append(next(
+                (n for n in reversed(above) if n not in ("Project", "Filter")), None
+            ))
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), above + [node.nodeName()])
+
+    walk(root, [])
+    return found
+
+
+@pytest.mark.parametrize("name", _PAIR_QUERIES)
+def test_pair_stream_is_not_reaggregated(spark, name):
+    """Pairs come out of banded_pairs' bucket join with the min-band dedup
+    as a map-side filter: no HashAggregate (distinct / dropDuplicates) or
+    Exchange may consume the quadratic pair stream above the join."""
+    from lagespark.operators import image_ops
+
+    image_ops.set_image_batching(spark)
+    consumers = _bucket_join_consumers(harness.QUERIES[name](spark, SF))
+    assert consumers, f"{name}: no (band | bucket) equi-join in the plan"
+    for c in consumers:
+        assert c is None or not (c.endswith("HashAggregate") or "Exchange" in c), (
+            f"{name}: {c} consumes the pair stream"
+        )

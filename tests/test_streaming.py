@@ -5,7 +5,6 @@ and custom state."""
 
 from __future__ import annotations
 
-import shutil
 import time
 import uuid
 
@@ -173,84 +172,6 @@ def test_stateful_running_totals(spark, tmpdir):
     )
     assert got.loc[7, "total"] == pytest.approx(5.0)
     assert got.loc[9, "total"] == pytest.approx(5.0)
-
-
-def test_transform_with_state_seam_without_protobuf(spark):
-    """Sandbox has no google.protobuf → the TWS op must fail FAST with the
-    documented error (not crash inside the JVM-spawned driver worker)."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf present — the parity test below covers TWS")
-    except ImportError:
-        pass
-    with pytest.raises(RuntimeError, match="google.protobuf"):
-        ops.running_user_totals_tws(
-            spark.read.parquet(f"{SF}/events.parquet")
-        )
-
-
-def test_transform_with_state_parity(spark, tmpdir):
-    """s07 on BOTH state APIs: transformWithStateInPandas (Spark 4) must
-    produce the same final per-user totals as applyInPandasWithState over a
-    two-batch run (second batch exercises state recovery). Requires
-    google.protobuf (PySpark TWS worker dependency) — skipped in the sandbox,
-    live on any real cluster."""
-    pytest.importorskip("google.protobuf")
-    t0 = pd.Timestamp("2024-01-01 00:00:00")
-    batch1 = [
-        (1, t0, 7, "a", 2.0, "{}"),
-        (2, t0 + pd.Timedelta(minutes=1), 7, "a", 3.0, "{}"),
-        (3, t0 + pd.Timedelta(minutes=2), 9, "a", 5.0, "{}"),
-    ]
-    batch2 = [
-        (4, t0 + pd.Timedelta(minutes=3), 7, "a", 10.0, "{}"),
-        (5, t0 + pd.Timedelta(minutes=4), 11, "a", 1.5, "{}"),
-    ]
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        finals = {}
-        for api, fn in (("aips", ops.running_user_totals),
-                        ("tws", ops.running_user_totals_tws)):
-            src = f"{tmpdir}/tws_src_{api}"
-            ck = f"{tmpdir}/tws_ck_{api}"
-            _mk_events(spark, batch1).write.parquet(src, mode="overwrite")
-            name = api + uuid.uuid4().hex[:8]
-            q = (
-                fn(ops.read_events_stream(spark, src))
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ck)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-                _mk_events(spark, batch2).write.parquet(src, mode="append")
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            got = (
-                spark.sql(f"SELECT * FROM {name}")
-                .toPandas()
-                .sort_values(["user_id", "n"])
-                .groupby("user_id")
-                .last()
-            )
-            finals[api] = got[["n", "total"]]
-        pd.testing.assert_frame_equal(finals["aips"], finals["tws"], check_dtype=False)
-        assert finals["tws"].loc[7, "total"] == pytest.approx(15.0)
-        assert finals["tws"].loc[7, "n"] == 3
-        assert finals["tws"].loc[11, "total"] == pytest.approx(1.5)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def test_stream_static_geo_join(spark, tmpdir):
@@ -707,71 +628,6 @@ def test_stream_dedup_retention_evicts_idle_keys(spark, tmpdir):
     assert run(10_000.0) == run(None)
     unbounded = run(None)
     assert {d for d, _ in unbounded} == {3, 4}
-
-
-def test_dedup_stream_tws_seam_without_protobuf(spark):
-    """Sandbox has no google.protobuf -> the MapState q104 variant must
-    fail FAST with the documented error, not crash inside the JVM worker."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pass
-    else:
-        pytest.skip("protobuf present — the parity test below covers TWS")
-    stream = spark.readStream.format("rate").load().selectExpr(
-        "value AS doc_id", "CAST(value AS STRING) AS text", "timestamp AS ts"
-    )
-    with pytest.raises(RuntimeError, match="google.protobuf"):
-        ops.dedup_stream_minhash_tws(stream)
-
-
-def test_dedup_stream_tws_matches_batch_replay(spark, tmpdir):
-    """MapState-path claims parity with ingest_claims_batch — needs
-    google.protobuf (PySpark TWS worker dependency) and the RocksDB state
-    store provider; skipped in the sandbox, live on real clusters."""
-    pytest.importorskip("google.protobuf")
-    b1, b2 = _doc_corpus()
-    src = f"{tmpdir}/tws_dd_src"
-    _mk_docs(spark, b1).write.parquet(src, mode="overwrite")
-    stream = spark.readStream.schema(
-        "doc_id bigint, text string, ts timestamp"
-    ).parquet(src)
-    name = "twsdd" + uuid.uuid4().hex[:8]
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            ops.dedup_stream_minhash_tws(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", f"{tmpdir}/tws_dd_ck")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            _mk_docs(spark, b2).write.parquet(src, mode="append")
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old
-            )
-    got = {
-        (r.doc_id, r.band, r.dup_of)
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    want_df = ops.ingest_claims_batch(
-        _mk_docs(spark, b1 + b2), order_col="ts", hashed=True
-    )
-    want = {(r.doc_id, r.band, r.dup_of) for r in want_df.collect()}
-    assert got == want and len(want) > 0
 
 
 def test_stream_dedup_reorder_restores_ts_ownership(spark, tmpdir):
