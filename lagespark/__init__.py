@@ -11,4 +11,8 @@ All geometry and image-codec kernels are written from scratch in numpy
 (no shapely / h3 / Pillow in this environment — SURVEY.md §0).
 """
 
+from lagespark import _zipcache
+
+_zipcache.install()
+
 __version__ = "0.1.0"

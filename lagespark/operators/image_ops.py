@@ -468,12 +468,15 @@ def generate_av(spark: SparkSession, n: int, partitions: int | None = None) -> D
 
     partitions=None derives the count from the table size, capped at the
     session's parallelism: ~64 media/task ≈ 0.5 s of real codec CPU —
-    coarse enough to amortize Python-worker spin-up and to keep every task
-    a full duration cycle (dur = 1000 + (i%60)·500 over contiguous index
-    ranges; finer splits leave tasks holding only the long-duration end),
-    fine enough to use a cluster. Round-8 A/B in the driver's cold bench
-    protocol at n=1000: fixed 8 → q64b 2.5 s, 32 (defaultParallelism) →
-    4.4-4.6 s (worker spin-up + duration skew), size-derived 16 → 1.6-1.8 s.
+    coarse enough that every task holds a full duration cycle (dur = 1000 +
+    (i%60)·500 over contiguous index ranges; finer splits leave some tasks
+    holding only the long-duration end, and the slowest task sets the
+    stage time), fine enough to use a cluster. Round-8 A/B in bench.py's
+    cold per-query protocol at n=1000: fixed 8 → q64b 2.5 s, 32
+    (defaultParallelism, ~31 media/task) → 4.4-4.6 s, size-derived 16 →
+    1.6-1.8 s. That A/B predates lagespark._zipcache, so part of the gap
+    at 32 was the old ~0.2 s per Python task; the duration-cycle reason
+    does not depend on it.
     Payloads are ≤ ~200 KB so per-task Arrow memory stays trivial."""
     if partitions is None:
         partitions = max(1, min(spark.sparkContext.defaultParallelism, -(-n // 64)))

@@ -707,10 +707,13 @@ def _repartition_for_kernel(df: DataFrame) -> DataFrame:
     serialize the kernel. One extra cheap round-robin shuffle buys full
     parallelism, and already balances rows by count.
 
-    No oversubscription, not even for variable-cost polygon clips: every
-    Python-worker task pays a fixed start cost (~0.2 s per core slot on a
-    4-vCPU box; tools/python_task_cost.py re-measures it), which outweighs
-    the load balance extra tasks buy (DESIGN_DECISIONS.md #30)."""
+    No oversubscription, not even for variable-cost polygon clips: in a
+    same-time join-tiles A/B, 2 × defaultParallelism beat one task per core
+    in no pair by more than the spread between runs (DESIGN_DECISIONS.md
+    #30). A Python task now costs ~0.07 s per core slot on a 4-vCPU box
+    (tools/python_task_cost.py re-measures it); the ~0.2 s it cost before
+    was zipimport re-reading pyspark.zip and the Spark jar on every task,
+    which lagespark._zipcache removes."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 

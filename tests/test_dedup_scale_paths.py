@@ -385,3 +385,45 @@ def test_pair_stream_is_not_reaggregated(spark, name):
         assert c is None or not (c.endswith("HashAggregate") or "Exchange" in c), (
             f"{name}: {c} consumes the pair stream"
         )
+
+
+def test_minhash_aggregate_signature_matches_transform_reference(spark):
+    """The one-pass aggregate minhash signature equals the old
+    perms×(transform + array_min) computation bit-for-bit."""
+    from lagespark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    base = dedup._spread(
+        docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
+    )
+    sh = base.select(
+        "doc_id", dedup.shingle_col("text", 3, distinct=False).alias("shs")
+    ).filter(F.size("shs") > 0)
+    perms = 8
+
+    def _perm(p):
+        return lambda s: F.xxhash64(F.lit(p), s)
+
+    ref = sh.select(
+        "doc_id",
+        *[
+            F.array_min(F.transform(F.col("shs"), _perm(p))).alias(f"mh{p}")
+            for p in range(perms)
+        ],
+    )
+    init = F.struct(
+        *[F.lit(2**63 - 1).cast("long").alias(f"m{p}") for p in range(perms)]
+    )
+
+    def _merge(acc, s):
+        return F.struct(
+            *[
+                F.least(acc[f"m{p}"], F.xxhash64(F.lit(p), s)).alias(f"m{p}")
+                for p in range(perms)
+            ]
+        )
+
+    agg = sh.select("doc_id", F.aggregate("shs", init, _merge).alias("_mh")).select(
+        "doc_id", *[F.col(f"_mh.m{p}").alias(f"mh{p}") for p in range(perms)]
+    )
+    assert ref.exceptAll(agg).count() == 0 and agg.exceptAll(ref).count() == 0

@@ -1,23 +1,11 @@
-"""Round-5 regression pins (VERDICT r4 next-items + the regex-serialization
-discovery):
-
-- normalize_expr / quality punct counting are translate()-based (regex-free):
-  in this Spark build regexp evaluation serializes across executor threads
-  (wall time invariant to partition count), so regex in a hot projection
-  caps the stage at single-core speed. The rewrite must stay bit-identical
-  to the old regex semantics on the ASCII corpus contract.
-- minhash_pairs_fast computes its signature as ONE aggregate fold (struct
-  accumulator) instead of `perms` transform+array_min projections; the mins
-  must be bit-identical.
-- decontaminate(hash_keys=True) equality with the string path is pinned in
-  test_round4_fixes (round-4 file) — the pipeline band-rows fit is covered
-  by the corpus e2e test.
-"""
+"""Text-cleaning expressions (operators/text.py): normalize_expr and the
+quality punct count are translate()-based, not regex-based. In this Spark
+build regexp evaluation serializes across executor threads (wall time does
+not change with partition count), so a regex in the clean stage's hot
+projection caps it at single-core speed. The rewrite must stay
+bit-identical to the old regex semantics on the ASCII corpus contract."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
 
 # the OLD regex forms, kept verbatim as the semantic reference
 _OLD_NORM_DUCK = (
@@ -93,48 +81,6 @@ def test_normalize_spark_duckdb_agree_on_edges(spark, duck):
         ).fetchall()
     ]
     assert got_s == got_d
-
-
-def test_minhash_aggregate_signature_matches_transform_reference(spark):
-    """The one-pass aggregate minhash signature equals the old
-    perms×(transform + array_min) computation bit-for-bit."""
-    from lagespark.operators import dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = dedup._spread(
-        docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-    )
-    sh = base.select(
-        "doc_id", dedup.shingle_col("text", 3, distinct=False).alias("shs")
-    ).filter(F.size("shs") > 0)
-    perms = 8
-
-    def _perm(p):
-        return lambda s: F.xxhash64(F.lit(p), s)
-
-    ref = sh.select(
-        "doc_id",
-        *[
-            F.array_min(F.transform(F.col("shs"), _perm(p))).alias(f"mh{p}")
-            for p in range(perms)
-        ],
-    )
-    init = F.struct(
-        *[F.lit(2**63 - 1).cast("long").alias(f"m{p}") for p in range(perms)]
-    )
-
-    def _merge(acc, s):
-        return F.struct(
-            *[
-                F.least(acc[f"m{p}"], F.xxhash64(F.lit(p), s)).alias(f"m{p}")
-                for p in range(perms)
-            ]
-        )
-
-    agg = sh.select("doc_id", F.aggregate("shs", init, _merge).alias("_mh")).select(
-        "doc_id", *[F.col(f"_mh.m{p}").alias(f"mh{p}") for p in range(perms)]
-    )
-    assert ref.exceptAll(agg).count() == 0 and agg.exceptAll(ref).count() == 0
 
 
 def test_regex_free_clean_plan(spark):

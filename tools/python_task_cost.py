@@ -2,7 +2,9 @@
 running kernel stages at one task per core (spatial._repartition_for_kernel).
 
 Times a do-nothing RDD map and a do-nothing pandas_udf over k and 8k
-partitions on local[k] (one untimed run, then the median of --reps). The
+partitions on local[k] (one untimed run, then the median of --reps). Both
+import lagespark in the worker, as unpickling any engine UDF does, so the
+numbers include what the package installs there (lagespark._zipcache). The
 8k-partition stage runs eight waves of tasks where the k-partition one runs
 one, so per_task_per_slot_s = (wall(8k) - wall(k)) / 7 is the wall time one
 extra Python task adds to each core slot. Prints one JSON line per stage.
@@ -48,12 +50,19 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
+    def ident_row(v):
+        import lagespark  # noqa: F401
+
+        return v
+
     @F.pandas_udf("long")
     def ident(s):
+        import lagespark  # noqa: F401
+
         return s
 
     stages = {
-        "rdd_map": lambda n: sc.parallelize(range(n), n).map(lambda v: v).count(),
+        "rdd_map": lambda n: sc.parallelize(range(n), n).map(ident_row).count(),
         "pandas_udf": lambda n: spark.range(0, n, 1, n).select(ident("id"))
         .write.format("noop").mode("overwrite").save(),
     }
