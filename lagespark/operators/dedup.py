@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lagespark.operators.checkpoint import checkpoint
+
 
 def _spread(df: DataFrame) -> DataFrame:
     """Repartition before a CPU-bound NATIVE stage: a small parquet file
@@ -856,11 +858,9 @@ def minhash_jaccard_pairs(
     # on BOTH pair sides and the two exchanges don't canonicalize equal
     # (different output aliases → no ReusedExchange — verified on the
     # executed plan), so without this checkpoint the corpus scan + shingle
-    # projection runs twice; the bitset path's collect reads it too
-    sh = sh.localCheckpoint(eager=True)
-    stats = sh.agg(
-        F.count(F.lit(1)).alias("nd"), F.sum(F.size("sh")).alias("nh")
-    ).first()
+    # projection runs twice; the bitset path's collect reads it too. The
+    # checkpoint's own job totals the hashes that pick the refine path.
+    ((sh, stats),) = checkpoint(sh, nh=F.sum(F.size("sh")))
     if (stats["nh"] or 0) <= bitset_max_hashes:
         out = _refine_bitset(cand, sh, id_col, threshold, bitset_max_bytes)
         if out is not None:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, DoubleType, IntegerType
 
 from lagespark.kernels import cells, geom
+from lagespark.operators.checkpoint import checkpoint
 
 # ---------------------------------------------------------------------------
 # feature representation (driver-side, broadcastable)
@@ -801,6 +802,9 @@ def _is_axis_rect(rings: str, xmin: str, ymin: str, xmax: str, ymax: str):
     )
 
 
+_BBOX = ("xmin", "ymin", "xmax", "ymax")
+
+
 def overlay_join(
     left: DataFrame,
     right: DataFrame,
@@ -808,8 +812,6 @@ def overlay_join(
     left_id: str = "feature_id",
     right_id: str = "feature_id",
     round_to: int = 4,
-    checkpoint_pairs: bool = True,
-    checkpoint_features: bool = True,
 ) -> DataFrame:
     """Distributed polygon ∩ polygon join for DATA-SCALE feature sets on
     BOTH sides (unlike the broadcast paths, which assume config-scale dims):
@@ -841,48 +843,24 @@ def overlay_join(
     Inputs need columns: id, rings (array<array<struct<x,y>>>),
     xmin/ymin/xmax/ymax. Output: (left_id_l, right_id_r, area) for pairs
     with positive intersection area."""
-    l = left.select(
-        F.col(left_id).alias("id_l"),
-        F.col("rings").alias("rings_l"),
-        F.col("xmin").alias("lxmin"),
-        F.col("ymin").alias("lymin"),
-        F.col("xmax").alias("lxmax"),
-        F.col("ymax").alias("lymax"),
-        _is_axis_rect("rings", "xmin", "ymin", "xmax", "ymax").alias("rect_l"),
-    )
-    r = right.select(
-        F.col(right_id).alias("id_r"),
-        F.col("rings").alias("rings_r"),
-        F.col("xmin").alias("rxmin"),
-        F.col("ymin").alias("rymin"),
-        F.col("xmax").alias("rxmax"),
-        F.col("ymax").alias("rymax"),
-        _is_axis_rect("rings", "xmin", "ymin", "xmax", "ymax").alias("rect_r"),
-    )
-    if checkpoint_features:
-        # each side feeds BOTH the cover explosion and the payload join —
-        # without persistence the upstream feature build executes twice per
-        # side (expensive for synthesized/derived inputs; for plain columnar
-        # scans pass False and let the scan repeat instead of materializing).
-        # Repartition first: the checkpoint captures the AQE-coalesced
-        # layout (~1 partition for small-byte frames), serializing every
-        # downstream map stage.
-        #
-        # The two checkpoints materialize CONCURRENTLY (round 8, guide
-        # §2.6): a lazy localCheckpoint on an AQE plan still executes every
-        # exchange stage below it synchronously inside the call, so the two
-        # independent feature builds otherwise serialize driver-side
-        # (measured ~3.4 s sequential vs ~0.4-1.8 s overlapped on the q68
-        # inputs). Job-description/thread-locals don't matter here — both
-        # jobs belong to this operator.
-        from concurrent.futures import ThreadPoolExecutor
+    def side(df: DataFrame, id_col: str, s: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("rings").alias(f"rings_{s}"),
+            *[F.col(c).alias(s + c) for c in _BBOX],
+            _is_axis_rect("rings", *_BBOX).alias(f"rect_{s}"),
+        )
 
-        par = l.sparkSession.sparkContext.defaultParallelism
-        lp, rp = l.repartition(par), r.repartition(par)
-        with ThreadPoolExecutor(2) as ex:
-            fl = ex.submit(lambda: lp.localCheckpoint(eager=False))
-            fr = ex.submit(lambda: rp.localCheckpoint(eager=False))
-            l, r = fl.result(), fr.result()
+    l, r = side(left, left_id, "l"), side(right, right_id, "r")
+    # each side feeds BOTH the cover explosion and the payload join —
+    # without persistence the upstream feature build executes twice per
+    # side. Repartition first: the checkpoint captures the AQE-coalesced
+    # layout (~1 partition for small-byte frames), serializing every
+    # downstream map stage. Lazy, and the two sides checkpoint CONCURRENTLY
+    # (round 8: ~3.4 s sequential vs ~0.4-1.8 s overlapped on the q68
+    # inputs); an eager pair made a 1000×1000 call + collect fire 10 jobs, not 8.
+    par = l.sparkSession.sparkContext.defaultParallelism
+    (l, _), (r, _) = checkpoint(l.repartition(par), r.repartition(par), eager=False)
     # the rect flag (1 bool, computed once per feature) rides the SKINNY
     # cover join, so rect×rect pairs — decided entirely by bbox arithmetic —
     # never pay the ring-payload joins at all
@@ -909,24 +887,22 @@ def overlay_join(
         "lxmin", "lymin", "lxmax", "lymax",
         "rxmin", "rymin", "rxmax", "rymax",
     )
-    if checkpoint_pairs:
-        # the deduped pair list feeds BOTH area paths (native rect and exact
-        # kernel); without persistence each union branch would re-run the
-        # whole cover join + dedup (no exchange reuse — the branches prune
-        # different columns). Lazy local checkpoint: skinny, bounded by the
-        # output size, materialized by the caller's first action.
-        # NO repartition before the checkpoint (round 8): AQE's
-        # parallelismFirst coalescing (default on in Spark 4) already keeps
-        # the post-join layout at ~defaultParallelism partitions, so the
-        # extra round-robin exchange re-shuffled the full pair list
-        # (~200 MB at sf0.1) for nothing — measured 2.8 s → 1.9 s. The
-        # CPU-bound kernel branch re-spreads itself via
-        # _repartition_for_kernel, so a small coalesced checkpoint can't
-        # serialize it. checkpoint_pairs=False keeps the plan fully visible
-        # for the plan-shape tests.
-        cand = cand.localCheckpoint(eager=False)
-
+    # the deduped pair list feeds BOTH area paths (native rect and exact
+    # kernel); without persistence each union branch would re-run the
+    # whole cover join + dedup (no exchange reuse — the branches prune
+    # different columns). EAGER, so the checkpoint's own job also counts
+    # the non-rect pairs that decide the kernel branch below.
+    # NO repartition before the checkpoint (round 8): AQE's
+    # parallelismFirst coalescing (default on in Spark 4) already keeps
+    # the post-join layout at ~defaultParallelism partitions, so the
+    # extra round-robin exchange re-shuffled the full pair list
+    # (~200 MB at sf0.1) for nothing — measured 2.8 s → 1.9 s. The
+    # CPU-bound kernel branch re-spreads itself via
+    # _repartition_for_kernel, so a small coalesced checkpoint can't
+    # serialize it.
     both_rect = F.col("rect_l") & F.col("rect_r")
+    ((cand, st),) = checkpoint(cand, n_gen=F.count_if(~both_rect))
+
     # rect×rect: fully native bbox-overlap area (a rect IS its bbox; overlap
     # extents are strictly positive here thanks to the bbox prefilter) — no
     # payload join, no Python
@@ -939,18 +915,14 @@ def overlay_join(
         .select("id_l", "id_r", "area")
     )
 
-    if checkpoint_pairs:
-        # data-adaptive branch elision (round 8, same discipline as
-        # intersects_join_ri's per-side rect probe): when every deduped pair
-        # is rect×rect — the common all-rect cadastre case — the kernel
-        # branch contributes NOTHING but still costs two broadcast builds
-        # (flat ring payloads), a round-robin exchange and an
-        # ArrowEvalPython stage full of empty tasks. One limit(1) probe on
-        # the already-checkpointed pair list decides; mixed inputs pay only
-        # that probe. Only safe behind the checkpoint (the probe would
-        # otherwise recompute the cover join).
-        if cand.filter(~both_rect).limit(1).count() == 0:
-            return rect_res
+    # data-adaptive branch elision (round 8, same discipline as
+    # intersects_join_ri's per-side rect pruning): when every deduped pair
+    # is rect×rect — the common all-rect cadastre case — the kernel
+    # branch contributes NOTHING but still costs two broadcast builds
+    # (flat ring payloads), a round-robin exchange and an ArrowEvalPython
+    # stage full of empty tasks. The count rode the checkpoint's job.
+    if not st["n_gen"]:
+        return rect_res
 
     # non-rect pairs: enrich with FLAT ring payloads (one shuffle per side,
     # keyed on the id — no per-cell multiplication of the wide column; the
@@ -1090,7 +1062,7 @@ def ri_masks(
 
     Masks are computed once per feature-cell and make most join-pair
     decisions pure bitwise arithmetic downstream. Two mask paths after the
-    (lazily-checkpointed) cover explosion:
+    (eagerly checkpointed) cover explosion:
 
       * axis-rect features (_is_axis_rect, native): both masks are pure
         Catalyst min/max arithmetic over the sub-grid — zero Python.
@@ -1102,44 +1074,37 @@ def ri_masks(
     count, so the exact kernel re-joins flat coordinates by id only for the
     ambiguous non-rect pairs (same shuffle hygiene as overlay_join). The
     rect flag + bbox let the join decide rect×rect pairs natively."""
-    return _masks_over_cover(_mask_cover(feats, cell_size, id_col), cell_size, sub)
+    ((cov, _),) = checkpoint(_mask_cover(feats, cell_size, id_col))
+    return _masks_over_cover(cov, cell_size, sub)
 
 
 def _mask_cover(
     feats: DataFrame, cell_size: float, id_col: str = "feature_id"
 ) -> DataFrame:
-    """Checkpointed per-(feature, cover cell) frame feeding the mask paths:
-    (id, xs, ys, nv, rect, lxmin..lymax, cell). Checkpointed because it
-    feeds multiple consumers (native-rect / kernel mask branches, and in
-    intersects_join_ri also the mask-free rect×rect pair path) — no
-    exchange reuse across branches with different pruning (see
-    overlay_join). Repartition first: the checkpoint captures the
-    AQE-coalesced layout (often ONE partition for skinny rows), which
-    would serialize every consumer."""
-    cov = _bbox_cover_cells(
+    """Per-(feature, cover cell) frame feeding the mask paths: (id, xs, ys,
+    nv, rect, lxmin..lymax, cell). Callers checkpoint it EAGERLY: it feeds
+    multiple consumers (native-rect / kernel mask branches, and in
+    intersects_join_ri also the mask-free rect×rect pair path and the
+    ambiguous payload agg) — no exchange reuse across branches with
+    different pruning (see overlay_join) — and the payload sides are
+    BROADCAST exchanges that materialize on concurrent threads at action
+    start, where a lazy checkpoint races and recomputes the cover once per
+    thread (measured: q82 warm 12 → 18-27 s with run-to-run swing; same
+    race class as dedup.banded_pairs / components). No repartition (round
+    8): it re-shuffled the payload-carrying exploded cover for nothing —
+    AQE's parallelismFirst layout stands, downstream joins re-shuffle
+    anyway, and the kernel mask branch re-spreads via
+    _repartition_for_kernel."""
+    return _bbox_cover_cells(
         feats.select(
             F.col(id_col).alias("id"),
             *_flat_ring_cols(F.col("rings"), ""),
-            _is_axis_rect("rings", "xmin", "ymin", "xmax", "ymax").alias("rect"),
-            F.col("xmin").alias("lxmin"),
-            F.col("ymin").alias("lymin"),
-            F.col("xmax").alias("lxmax"),
-            F.col("ymax").alias("lymax"),
+            _is_axis_rect("rings", *_BBOX).alias("rect"),
+            *[F.col(c).alias("l" + c) for c in _BBOX],
         ),
         cell_size,
         "l",
     )
-    # EAGER: the cover feeds up to four consumers in intersects_join_ri
-    # (rect pair path, two mask families, the ambiguous payload agg), and
-    # the payload sides are BROADCAST exchanges that materialize on
-    # concurrent threads at action start — a lazy checkpoint races there
-    # and recomputes the cover once per thread (measured: q82 warm
-    # 12 → 18-27 s with run-to-run swing; same race class as
-    # dedup.banded_pairs / components). No repartition (round 8): it
-    # re-shuffled the payload-carrying exploded cover for nothing — AQE's
-    # parallelismFirst layout stands, downstream joins re-shuffle anyway,
-    # and the kernel mask branch re-spreads via _repartition_for_kernel.
-    return cov.localCheckpoint(eager=True)
 
 
 def _masks_over_cover(cov: DataFrame, cell_size: float, sub: int) -> DataFrame:
@@ -1275,19 +1240,16 @@ def intersects_join_ri(
     yes → distinct at the end. Returns (id_l, id_r, method) where method
     records how the pair was decided ('rect', 'ri' or 'exact') — the
     pruning-rate diagnostic."""
-    # the COVERS are the shared substrate (checkpointed inside _mask_cover —
-    # they feed the rect pair path and up to two mask families per side).
-    # Built CONCURRENTLY (round 8, guide §2.6): each cover is an EAGER
-    # checkpoint, i.e. a full synchronous job (scan + dedup agg + cover
-    # explosion); the two sides are independent, so overlapping them
-    # halves the sequential driver wait.
-    from concurrent.futures import ThreadPoolExecutor
-
-    par = left.sparkSession.sparkContext.defaultParallelism
-    with ThreadPoolExecutor(2) as ex:
-        fl = ex.submit(_mask_cover, left, cell_size, left_id)
-        fr = ex.submit(_mask_cover, right, cell_size, right_id)
-        lcov, rcov = fl.result(), fr.result()
+    # the COVERS are the shared substrate (they feed the rect pair path and
+    # up to two mask families per side), built CONCURRENTLY (round 8): each
+    # is an eager checkpoint, i.e. a full synchronous job (scan + dedup agg
+    # + cover explosion). The same jobs count each side's non-rect cover
+    # rows, which decide the per-side rect pruning below.
+    (lcov, lst), (rcov, rst) = checkpoint(
+        _mask_cover(left, cell_size, left_id),
+        _mask_cover(right, cell_size, right_id),
+        n_gen=F.count_if(~F.col("rect")),
+    )
 
     # rect × rect pairs: an axis-rect IS its bbox, so the pair verdict is
     # GLOBAL bbox arithmetic — overlap area > 1e-9 (the exact kernel's own
@@ -1302,12 +1264,7 @@ def intersects_join_ri(
         F.col("id").alias("id_l"), "cell", "lxmin", "lymin", "lxmax", "lymax"
     )
     rrect = rcov.filter(F.col("rect")).select(
-        F.col("id").alias("id_r"),
-        "cell",
-        F.col("lxmin").alias("rxmin"),
-        F.col("lymin").alias("rymin"),
-        F.col("lxmax").alias("rxmax"),
-        F.col("lymax").alias("rymax"),
+        F.col("id").alias("id_r"), "cell", *[F.col("l" + c).alias("r" + c) for c in _BBOX]
     )
     gpx = F.least(F.col("lxmax"), F.col("rxmax")) - F.greatest(
         F.col("lxmin"), F.col("rxmin")
@@ -1339,14 +1296,11 @@ def intersects_join_ri(
     # The mask families only ever DECIDE pairs with >= 1 non-rect side
     # (rect×rect is filtered out of the candidate set below), so a side's
     # masks/payloads are needed for its rect rows ONLY when the OTHER side
-    # has non-rect rows. Probe the eagerly-checkpointed covers (driver-side
-    # adaptive choice, same spirit as the count-guarded broadcasts): on an
-    # all-rect × all-rect input the whole mask/kernel pipeline folds away
-    # and the join is pure codegen bbox arithmetic (measured: 65k×65k
-    # rect-only warm 12.6 → ~6 s; the probe itself is a ms-scale scan of
-    # the in-memory checkpoint).
-    l_has_gen = lcov.filter(~F.col("rect")).limit(1).count() > 0
-    r_has_gen = rcov.filter(~F.col("rect")).limit(1).count() > 0
+    # has non-rect rows (driver-side adaptive choice, same spirit as the
+    # count-guarded broadcasts): on an all-rect × all-rect input the whole
+    # mask/kernel pipeline folds away and the join is pure codegen bbox
+    # arithmetic (measured: 65k×65k rect-only warm 12.6 → ~6 s).
+    l_has_gen, r_has_gen = bool(lst["n_gen"]), bool(rst["n_gen"])
     if not (l_has_gen or r_has_gen):
         return rect_pairs
     lsrc = lcov if r_has_gen else lcov.filter(~F.col("rect"))
@@ -1370,10 +1324,7 @@ def intersects_join_ri(
     rm = _masks_over_cover(rsrc, cell_size, sub).select(
         F.col("id").alias("id_r"),
         F.col("rect").alias("rect_r"),
-        F.col("lxmin").alias("rxmin"),
-        F.col("lymin").alias("rymin"),
-        F.col("lxmax").alias("rxmax"),
-        F.col("lymax").alias("rymax"),
+        *[F.col("l" + c).alias("r" + c) for c in _BBOX],
         "cell",
         F.col("a_mask").alias("a_r"),
         F.col("f_mask").alias("f_r"),

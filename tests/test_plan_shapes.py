@@ -134,18 +134,29 @@ def test_ri_rect_masks_native_equals_kernel(spark):
     assert k4 == k5, "native rect masks diverge from the clip kernel"
 
 
-def test_overlay_join_cover_explosion_is_native(spark):
+def test_overlay_join_cover_explosion_is_native(spark, monkeypatch):
     """The distributed overlay join's cover explosion must be native
     (sequence/explode in codegen) — Python appears only at the final exact
     kernel, after the cell join + prefilters + rect fast path. Inspected
-    with checkpoint_pairs=False (the production checkpoint replaces the
-    upstream plan with an RDD scan in explain output)."""
+    through the checkpoint helper's seam (the production checkpoint
+    replaces the upstream plan with an RDD scan in explain output): the
+    pair frame comes back unmaterialized and reports one general pair, so
+    the kernel branch is planned over the full pair plan."""
     from lagespark import harness
     from lagespark.operators import spatial
 
+    real = spatial.checkpoint
+
+    def seam(*frames, eager=True, **stats):
+        if "n_gen" not in stats:
+            return real(*frames, eager=eager, **stats)
+        return [(f, {"n_gen": 1}) for f in frames]
+
     a = harness._rect_features(spark, SF, 17)
     b = harness._rect_features(spark, SF, 19)
-    df = spatial.overlay_join(a, b, cell_size=250.0, round_to=2, checkpoint_pairs=False)
+    with monkeypatch.context() as mp:
+        mp.setattr(spatial, "checkpoint", seam)
+        df = spatial.overlay_join(a, b, cell_size=250.0, round_to=2)
     p = plan_of(df, "simple")
     # exactly one Arrow UDF node (the exact-area kernel, general-pair branch)
     assert p.count("ArrowEvalPython") == 1
@@ -155,8 +166,9 @@ def test_overlay_join_cover_explosion_is_native(spark):
     assert m.groups() == ("RoundRobinPartitioning", str(spark.sparkContext.defaultParallelism))
     assert "Generate explode" in p  # native cover explosion
     # the registered q68 is ALL-RECT input: with the round-8 data-adaptive
-    # probe the kernel branch is elided entirely — zero Python nodes, pure
-    # codegen end-to-end (the probe only fires on the checkpointed path)
+    # elision the kernel branch is dropped entirely — zero Python nodes,
+    # pure codegen end-to-end (the general-pair count rides the pair
+    # checkpoint's own job)
     p2 = plan_of(harness.QUERIES["q68-geo-overlay-join"](spark, SF), "simple")
     assert p2.count("ArrowEvalPython") == 0
     assert "Union" not in p2  # single native rect branch

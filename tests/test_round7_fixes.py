@@ -1,16 +1,10 @@
-"""Round-7 regression pins (VERDICT r6 next-items + the four ADVICE items):
+"""Round-7 regression pins (VERDICT r6 next-items + the four ADVICE items;
+the bitset-refine rounding/broadcast and fit_banding_matched pins live in
+test_dedup_scale_paths.py):
 
-- bitset-refine rounding is Spark-ROUND-bit-exact (decimal-repr HALF_UP,
-  not binary floor(x*1e4+0.5)) — the 131/160 = 0.81875 case that the two
-  paths previously disagreed on by 1 ulp-of-4dp.
-- the bitset refine unpersists the PREVIOUS call's broadcast so long-lived
-  sessions don't accumulate up to 256 MB per call.
 - ingest_claims_batch never emits a self-claim when the same doc id
   appears on multiple rows (parity with the streaming fn's owner != rid
   guard, which previously held only on unique-id corpora).
-- fit_banding_matched: candidate-volume-first banding derivation, and
-  minhash_jaccard_pairs derives its banding from the threshold by default
-  (the 46,000x over-generation trap closed at the API).
 - text operators' Latin-1 contract: normalize/quality strip the full
   Latin-1 punctuation/control range, keep Latin-1 letters, and agree
   byte-for-byte between Spark and DuckDB on non-ASCII input.
@@ -19,67 +13,6 @@
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-
-# -- ADVICE #1: Spark-exact rounding in the bitset refine ----------------------
-
-
-def test_round_like_spark_matches_spark_round(spark):
-    from lagespark.operators import dedup
-
-    # the documented divergence case + a dense grid of small ratios
-    # (includes many exact 4-dp halves whose nearest double sits below)
-    ratios = [(131, 160)] + [(i, j) for j in range(1, 40) for i in range(1, j)]
-    vals = [i / j for i, j in ratios]
-    sdf = spark.createDataFrame([(v,) for v in vals], "x double")
-    want = [r[0] for r in sdf.selectExpr("round(x, 4)").collect()]
-    got = [dedup._round_like_spark(v) for v in vals]
-    assert got == want
-    assert dedup._round_like_spark(131 / 160) == 0.8188  # binary-floor gives .8187
-
-
-def test_bitset_refine_emits_spark_rounded_values(spark):
-    """End-to-end: a pair whose jaccard is exactly 131/160 must come out of
-    the BITSET path as 0.8188 (Spark ROUND), not the binary-floor 0.8187."""
-    import numpy as np
-    import pandas as pd
-
-    from lagespark.operators import dedup
-
-    # two docs with |A|=|B|=160-ish shingle sets intersecting in 131 is hard
-    # to author via text; drive _refine_bitset directly with synthetic
-    # hashed-shingle sets: A = 0..159, B = 29..188 -> inter=131, union=189?
-    # No: choose A = 0..144 (145), B = 116..159 + 0..115? Simplest exact
-    # construction: |A| = 145, |B| = 146, inter = 131 -> union = 160,
-    # jac = 131/160 = 0.81875 >= 0.8.
-    a_set = list(range(145))
-    b_set = list(range(14, 145)) + list(range(1000, 1015))
-    assert len(set(a_set) & set(b_set)) == 131
-    assert len(set(a_set) | set(b_set)) == 160
-    sh = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "sh": [a_set, b_set]})
-    )
-    cand = spark.createDataFrame([(1, 2)], "a long, b long")
-    out = dedup._refine_bitset(cand, sh, "doc_id", 0.8, 256 << 20)
-    rows = out.collect()
-    assert len(rows) == 1
-    assert rows[0]["jaccard"] == 0.8188
-    del np  # silence linters; numpy presence is the bitset path's precondition
-
-
-# -- ADVICE #2: broadcast lifecycle --------------------------------------------
-
-
-def test_bitset_broadcast_unpersisted_on_next_call(spark):
-    from lagespark.operators import dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(80)
-    for _ in range(2):
-        out = dedup.minhash_jaccard_pairs(docs, threshold=0.62)
-        out.count()
-    # the previous call's broadcast was popped + unpersisted; only the most
-    # recent survives the session
-    assert len(dedup._BITSET_BCS) <= 1
 
 
 # -- ADVICE #3: duplicate-id parity between batch and streaming claims ---------
@@ -96,57 +29,6 @@ def test_ingest_claims_batch_no_self_claim_on_duplicate_ids(spark):
     assert not any(d == o for d, _, o in got)
     # ...while doc 2 (a true duplicate of doc 1) claims doc 1 in every band
     assert {(d, o) for d, _, o in got} == {(2, 1)}
-
-
-# -- fit_banding_matched + derived defaults ------------------------------------
-
-
-def test_fit_banding_matched_pins():
-    from lagespark.operators import dedup
-
-    # the 0.8-threshold trap: static (8, 2) had t* ~= 0.5; matched banding
-    # lands t* ~= 0.707 with recall ~= 0.91
-    assert dedup.fit_banding_matched(0.8) == (48, 6)
-    assert dedup.fit_banding_matched(0.62) == (64, 4)
-    for thr in (0.5, 0.62, 0.7, 0.8, 0.9):
-        perms, r = dedup.fit_banding_matched(thr)
-        b = perms // r
-        assert perms % r == 0 and perms <= 64
-        tstar = (1.0 / b) ** (1.0 / r)
-        recall = 1.0 - (1.0 - thr**r) ** b
-        assert tstar <= thr and recall >= 0.9
-        # no other divisor pair on the ladder beats the returned t*
-        for p2 in range(8, 65, 8):
-            for r2 in range(1, p2 + 1):
-                if p2 % r2:
-                    continue
-                b2 = p2 // r2
-                t2 = (1.0 / b2) ** (1.0 / r2)
-                rec2 = 1.0 - (1.0 - thr**r2) ** b2
-                if t2 <= thr and rec2 >= 0.9:
-                    assert t2 <= tstar + 1e-12
-
-
-def test_minhash_jaccard_pairs_derives_banding(spark, monkeypatch):
-    from lagespark.operators import dedup
-
-    seen = {}
-    orig = dedup.minhash_pairs_fast
-
-    def spy(df, id_col, text_col, perms, band_rows, n, **kw):
-        seen["banding"] = (perms, band_rows)
-        return orig(df, id_col, text_col, perms, band_rows, n, **kw)
-
-    monkeypatch.setattr(dedup, "minhash_pairs_fast", spy)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(40)
-    dedup.minhash_jaccard_pairs(docs, threshold=0.8).count()
-    assert seen["banding"] == dedup.fit_banding_matched(0.8) == (48, 6)
-    # explicit values still win
-    dedup.minhash_jaccard_pairs(docs, threshold=0.8, perms=8, band_rows=2).count()
-    assert seen["banding"] == (8, 2)
-    # perms given, band_rows derived threshold-matched for that perms
-    dedup.minhash_jaccard_pairs(docs, threshold=0.8, perms=24).count()
-    assert seen["banding"] == (24, dedup.fit_band_rows(24, 0.8)) == (24, 6)
 
 
 # -- Latin-1 text contract ------------------------------------------------------
