@@ -8,6 +8,8 @@ Stages (each checkpointed with manifest + per-partition lineage/metrics):
             pruning serves both spatial range queries and resume)
   zones   — Lagefaktor zone assignment per image (exact distance kernel),
             partitioned by zone
+  tiles   — per-(tile, zone) image counts and payload bytes, partitioned
+            by tile bucket
   scores  — per-zone/fmt aggregation (tiny output)
 
 Usage (local example; on a cluster swap --master and add --py-files zip):
@@ -15,7 +17,7 @@ Usage (local example; on a cluster swap --master and add --py-files zip):
   python tools/make_pyfiles_zip.py /tmp/lagespark.zip
   spark-submit --master local[8] --py-files /tmp/lagespark.zip \
       -m lagespark.pipeline.cli --out /tmp/pipe --n-images 2000
-  # kill it mid-run, then resume:
+  # kill it mid-run, then keep the partitions it finished:
   spark-submit ... -m lagespark.pipeline.cli --out /tmp/pipe --resume
 """
 
@@ -33,7 +35,12 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--out", required=True, help="output root directory")
     p.add_argument("--n-images", type=int, default=2000)
     p.add_argument("--partitions", type=int, default=16)
-    p.add_argument("--resume", action="store_true", help="resume from checkpoints")
+    p.add_argument(
+        "--resume", action="store_true",
+        help="keep the partitions an interrupted run left in an incomplete "
+        "stage and compute only the missing ones (a complete stage with the "
+        "same inputs is never rebuilt, with or without this flag)",
+    )
     p.add_argument("--master", default=None)
     p.add_argument("--cell-size", type=float, default=250.0)
     return p
@@ -43,38 +50,49 @@ def run(args) -> dict:
     from lagespark import fixtures
     from lagespark.operators import image_ops, spatial
     from lagespark.pipeline import manifest
-    from lagespark.session import get_spark
 
-    spark = get_spark(args.master, app_name="lagespark-pipeline")
-    spark.sparkContext.setLogLevel("WARN")
+    spark = manifest.session(args.master, "lagespark-pipeline")
 
-    # stage 1: images (cell-indexed, partitioned by spatially-coherent prefix)
-    img_dir = os.path.join(args.out, "images")
-    imgs = image_ops.generate_images(spark, args.n_images, args.partitions)
-    imgs = spatial.with_grid_cell(imgs, cell_size=args.cell_size)
-    imgs = imgs.withColumn(
-        "cell_prefix", F.pmod(F.floor(F.col("x") / F.lit(args.cell_size * 4)), 16).cast("int")
-    )
-    m1 = manifest.write_stage(
-        imgs, img_dir, "images", "cell_prefix", inputs=[], resume=args.resume
-    )
+    def stage(name, build, partition_col, inputs):
+        return manifest.run_stage(
+            build, os.path.join(args.out, name), name, partition_col, inputs,
+            resume=args.resume,
+        )[0]
 
-    # stage 2: zone assignment (reads stage 1 back — partition-prunable)
-    zone_dir = os.path.join(args.out, "zones")
-    stage1 = spark.read.parquet(img_dir)
-    zoned = spatial.with_zone(stage1, spatial.FeatureSet(fixtures.baufeld_pdf()))
-    m2 = manifest.write_stage(
-        zoned, zone_dir, "zones", "zone", inputs=[m1["manifest_id"]], resume=args.resume
+    # builders read their upstream stage back (verified, partition-prunable)
+    # only when they run, so a skipped stage costs no read
+    def read(name):
+        return manifest.read_stage(spark, os.path.join(args.out, name))[0]
+
+    # stage 1: images (cell-indexed, partitioned by spatially-coherent prefix).
+    # Its inputs are every flag that changes its rows (--partitions does not:
+    # generation is per-index); downstream stages chain on manifest ids
+    def _build_images():
+        imgs = image_ops.generate_images(spark, args.n_images, args.partitions)
+        imgs = spatial.with_grid_cell(imgs, cell_size=args.cell_size)
+        return imgs.withColumn(
+            "cell_prefix",
+            F.pmod(F.floor(F.col("x") / F.lit(args.cell_size * 4)), 16).cast("int"),
+        )
+
+    m1 = stage("images", _build_images, "cell_prefix",
+               [f"n_images={args.n_images}", f"cell_size={args.cell_size}"])
+
+    # stage 2: zone assignment
+    m2 = stage(
+        "zones",
+        lambda: spatial.with_zone(
+            read("images"), spatial.FeatureSet(fixtures.baufeld_pdf())),
+        "zone", [m1["manifest_id"]],
     )
 
     # stage 3: tile materialization ("a killed job resumes MID-TILING",
     # BASELINE.json:6 — tiles are partitioned by a tile bucket so resume
     # recomputes only missing buckets)
-    tile_dir = os.path.join(args.out, "tiles")
-    stage2b = spark.read.parquet(zone_dir)
     tile_size = args.cell_size * 4
-    tiles = (
-        stage2b.withColumn(
+    m3 = stage(
+        "tiles",
+        lambda: read("zones").withColumn(
             "tile_id",
             (F.floor(F.col("x") / tile_size).cast("long") + 1048576) * 2097152
             + (F.floor(F.col("y") / tile_size).cast("long") + 1048576),
@@ -84,28 +102,19 @@ def run(args) -> dict:
             F.count(F.lit(1)).alias("n_images"),
             F.sum(F.length("bytes")).alias("payload_bytes"),
         )
-        .withColumn("tile_bucket", F.pmod(F.col("tile_id"), 16).cast("int"))
-    )
-    m3 = manifest.write_stage(
-        tiles, tile_dir, "tiles", "tile_bucket", inputs=[m2["manifest_id"]],
-        resume=args.resume,
+        .withColumn("tile_bucket", F.pmod(F.col("tile_id"), 16).cast("int")),
+        "tile_bucket", [m2["manifest_id"]],
     )
 
     # stage 4: aggregation (single small output + manifest)
-    score_dir = os.path.join(args.out, "scores")
-    stage3 = spark.read.parquet(tile_dir)
-    scores = stage3.groupBy("zone").agg(
-        F.sum("n_images").alias("n"),
-        F.sum("payload_bytes").alias("payload_bytes"),
-        F.count(F.lit(1)).alias("n_tiles"),
-    )
-    m4 = manifest.write_stage(
-        scores.withColumn("bucket", F.lit(0)),
-        score_dir,
+    m4 = stage(
         "scores",
-        "bucket",
-        inputs=[m3["manifest_id"]],
-        resume=args.resume,
+        lambda: read("tiles").groupBy("zone").agg(
+            F.sum("n_images").alias("n"),
+            F.sum("payload_bytes").alias("payload_bytes"),
+            F.count(F.lit(1)).alias("n_tiles"),
+        ).withColumn("bucket", F.lit(0)),
+        "bucket", [m3["manifest_id"]],
     )
     out = {"images": m1, "zones": m2, "tiles": m3, "scores": m4}
     print(json.dumps({s: {"rows": sum(p["rows"] for p in m["partitions"].values()),

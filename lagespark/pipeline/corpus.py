@@ -15,10 +15,11 @@ operators into one resumable, checkpoint-manifested job:
             (training-mix rebalancing; rates are configuration)
   pack    — greedy cumulative-token sequence packing per language shard
 
-Every stage writes partitioned parquet + a JSON manifest (per-partition
-lineage + metrics, atomic commit — pipeline/manifest.py), so a killed run
-resumes from the last committed stage and a cluster swaps the writer to
-Iceberg via the format-pluggable seam.
+Every stage goes through pipeline/manifest.py's run_stage: partitioned
+parquet + a JSON manifest (per-partition lineage + metrics, atomic commit).
+A complete stage with the same inputs is never rebuilt, so a re-run starts
+at the first stage that is missing, incomplete or stale; --resume also keeps
+an interrupted stage's finished partitions.
 
 Usage:
   python -m lagespark.pipeline.corpus --out /tmp/corpus \
@@ -38,7 +39,12 @@ def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="lagespark-corpus", description=__doc__)
     p.add_argument("--out", required=True, help="output root directory")
     p.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    p.add_argument("--resume", action="store_true")
+    p.add_argument(
+        "--resume", action="store_true",
+        help="keep the partitions an interrupted run left in an incomplete "
+        "stage and compute only the missing ones (a complete stage with the "
+        "same inputs is never rebuilt, with or without this flag)",
+    )
     p.add_argument("--master", default=None)
     p.add_argument("--min-tokens", type=int, default=5)
     p.add_argument("--max-punct-ratio", type=float, default=0.3)
@@ -107,34 +113,12 @@ def _fingerprint(path: str) -> str:
 
 
 def run(args) -> dict:
+    import time
+
     from lagespark.operators import dedup, text
     from lagespark.pipeline import manifest
-    from lagespark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    # reuse an ACTIVE session untouched (embedded use: bench/scaling drive
-    # this from an already-configured per-level session, and getOrCreate
-    # would apply the builder's options TO that session — silently resetting
-    # spark.sql.shuffle.partitions and the log level mid-benchmark); only a
-    # standalone CLI invocation builds its own
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        spark = active
-        if args.master is not None:
-            # ADVICE r5: make a mismatched --master visible — the active
-            # session wins and its master may differ from what was requested
-            import warnings
-
-            warnings.warn(
-                f"corpus.run: reusing ACTIVE SparkSession "
-                f"(master={spark.sparkContext.master!r}); --master "
-                f"{args.master!r} and the WARN log-level set are IGNORED",
-                stacklevel=2,
-            )
-    else:
-        spark = get_spark(args.master, app_name="lagespark-corpus")
-        spark.sparkContext.setLogLevel("WARN")
+    spark = manifest.session(args.master, "lagespark-corpus")
 
     # _spread: the clean stage's langid/quality expressions are CPU-bound
     # native work — a small-file scan is ONE partition and would run them
@@ -148,55 +132,49 @@ def run(args) -> dict:
     # barriers vs genuinely sublinear compute stages
     stage_sec: dict[str, float] = {}
 
-    def stage(df_builder, out_dir, name, inputs):
-        """Build + write the stage, or — on resume with a complete manifest
-        for the SAME inputs — skip even constructing the DataFrame
-        (iterative builders fire jobs at construction time)."""
-        import time
-
+    def stage(build, name, inputs):
+        """run_stage under the stage's wall time (0.0 when not built)."""
         t0 = time.perf_counter()
-        if args.resume and manifest.stage_done(out_dir, inputs):
-            man = manifest.read_manifest(out_dir)
-            stage_sec[name] = 0.0
-        else:
-            man = manifest.write_stage(
-                df_builder(), out_dir, name, "lang", inputs=inputs,
-                resume=args.resume,
-            )
-            stage_sec[name] = round(time.perf_counter() - t0, 3)
-        df, _ = manifest.read_stage(spark, out_dir)
-        return df, man
+        man, built = manifest.run_stage(
+            build, os.path.join(args.out, name), name, "lang", inputs,
+            resume=args.resume,
+        )
+        stage_sec[name] = round(time.perf_counter() - t0, 3) if built else 0.0
+        return man
+
+    # builders read their upstream stage back (verified) only when they
+    # run, so a skipped stage costs no read
+    def read(name):
+        return manifest.read_stage(spark, os.path.join(args.out, name))[0]
 
     # stage 1: clean — normalize, langid, tokens, quality gate.
     # inputs = the resolved source dir + a cheap content fingerprint of
     # documents.parquet (file sizes + mtimes): re-running into the same --out
     # with a different --sf-dir (or regenerated source data) must invalidate
     # the whole manifest-id chain instead of silently serving the stale
-    # clean stage (stage_done compares inputs).
-    src = os.path.join(args.sf_dir, "documents.parquet")
-    src_fp = _fingerprint(src)
-    clean_dir = os.path.join(args.out, "clean")
-    lang = text.langid_expr("text", "spark")
-    tok = text.token_count_ws_expr("text", "spark")
-    qual = text.quality_exprs("text", "spark")
-    clean = docs.filter(F.col("text").isNotNull()).selectExpr(
-        "doc_id",
-        "text",
-        text.normalize_expr("text", "spark") + " AS norm",
-        f"{lang} AS lang",
-        f"CAST({tok} AS BIGINT) AS tok",
-        f"{qual['punct_ratio']} AS punct_ratio",
-    ).filter(
-        (F.col("tok") >= args.min_tokens)
-        & (F.col("punct_ratio") <= args.max_punct_ratio)
-    )
+    # clean stage (run_stage compares inputs).
+    src_fp = _fingerprint(os.path.join(args.sf_dir, "documents.parquet"))
+
+    def _build_clean():
+        return docs.filter(F.col("text").isNotNull()).selectExpr(
+            "doc_id",
+            "text",
+            text.normalize_expr("text", "spark") + " AS norm",
+            text.langid_expr("text", "spark") + " AS lang",
+            f"CAST({text.token_count_ws_expr('text', 'spark')} AS BIGINT) AS tok",
+            text.quality_exprs("text", "spark")["punct_ratio"] + " AS punct_ratio",
+        ).filter(
+            (F.col("tok") >= args.min_tokens)
+            & (F.col("punct_ratio") <= args.max_punct_ratio)
+        )
+
     # stage inputs carry the upstream identity AND the stage's own
-    # parameters: a changed flag must invalidate the checkpoint on
-    # --resume exactly like changed data does (stage_done compares the
-    # full list) — otherwise e.g. a different --dedup-band-rows would
-    # silently serve the old pair set
-    clean, m1 = stage(
-        lambda: clean, clean_dir, "clean",
+    # parameters: a changed flag must invalidate the checkpoint exactly
+    # like changed data does (run_stage compares the full list) — otherwise
+    # e.g. a different --dedup-band-rows would silently serve the old pair
+    # set
+    m1 = stage(
+        _build_clean, "clean",
         [src_fp, f"min_tokens={args.min_tokens}",
          f"max_punct_ratio={args.max_punct_ratio}"],
     )
@@ -204,9 +182,8 @@ def run(args) -> dict:
     # stage 2: dedup — LSH candidates over the NORMALIZED text, refined by
     # exact n-gram Jaccard (only candidates pay the set comparison), then
     # components → keep each cluster's min id (+ all unclustered docs)
-    dedup_dir = os.path.join(args.out, "dedup")
-
     def _build_dedup():
+        clean = read("clean")
         pairs = dedup.minhash_jaccard_pairs(
             clean, id_col="doc_id", text_col="norm",
             perms=args.dedup_perms,
@@ -215,20 +192,19 @@ def run(args) -> dict:
         return dedup.dedup_corpus(clean, pairs=pairs, id_col="doc_id")
 
     # inputs = upstream MANIFEST IDS (not paths): a rebuilt upstream stage
-    # gets a fresh id, so stage_done/write_stage invalidate downstream
-    # checkpoints instead of serving stale data (see pipeline/cli.py)
-    kept, m2 = stage(
-        _build_dedup, dedup_dir, "dedup",
+    # gets a fresh id, so run_stage rebuilds downstream stages instead of
+    # serving stale data (see pipeline/cli.py)
+    m2 = stage(
+        _build_dedup, "dedup",
         [m1["manifest_id"], f"perms={args.dedup_perms}",
          f"band_rows={args.dedup_band_rows}",
          f"jaccard={args.dedup_jaccard}"],
     )
 
     # stage 3: decon — drop docs overlapping the eval holdout
-    decon_dir = os.path.join(args.out, "decon")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = kept.filter(F.col("doc_id") % 97 != 0)
     def _build_decon():
+        bench = docs.filter(F.col("doc_id") % 97 == 0)
+        corpus = read("dedup").filter(F.col("doc_id") % 97 != 0)
         # hash_keys: production wire format — the broadcast + probe carry
         # 8-byte xxhash64 keys instead of raw 20-char shingle strings
         contaminated = dedup.decontaminate(
@@ -237,35 +213,35 @@ def run(args) -> dict:
         ).select("doc_id")
         return corpus.join(contaminated, "doc_id", "left_anti")
 
-    deconned, m3 = stage(
-        _build_decon, decon_dir, "decon",
+    m3 = stage(
+        _build_decon, "decon",
         [m2["manifest_id"], f"ngram={args.decon_ngram}", "keys=xxhash64"],
     )
 
     # stage 4: mix — per-language deterministic downsampling
-    mix_dir = os.path.join(args.out, "mix")
     rates = dict(kv.split(":") for kv in args.mix_rates.split(",") if kv)
     pred = text.stratified_sample_pred("text", "lang", rates, "spark")
-    mixed, m4 = stage(
-        lambda: deconned.filter(F.expr(pred)), mix_dir, "mix",
+    m4 = stage(
+        lambda: read("decon").filter(F.expr(pred)), "mix",
         [m3["manifest_id"], f"rates={args.mix_rates}"],
     )
 
     # stage 5: pack — greedy cumulative-token chunking per (lang, hash-bucket)
     # shard: the 16-way md5 sub-shard bounds any window reducer's input at
     # corpus/16 even when the mix is monolingual (pack_bucket_expr)
-    pack_dir = os.path.join(args.out, "packs")
-    bucket_sql = text.pack_bucket_expr("doc_id", "spark")
-    run_sql, pack_sql = text.pack_exprs(
-        "tok", ("lang", "bucket"), "doc_id", args.pack_budget
-    )
-    running = mixed.selectExpr(
-        "doc_id", "lang", f"{bucket_sql} AS bucket", "tok"
-    ).selectExpr(
-        "doc_id", "lang", "bucket", "tok", f"{run_sql} AS running"
-    ).selectExpr("doc_id", "lang", "bucket", "tok", f"{pack_sql} AS pack_id")
-    packs, m5 = stage(
-        lambda: running, pack_dir, "packs",
+    def _build_packs():
+        bucket_sql = text.pack_bucket_expr("doc_id", "spark")
+        run_sql, pack_sql = text.pack_exprs(
+            "tok", ("lang", "bucket"), "doc_id", args.pack_budget
+        )
+        return read("mix").selectExpr(
+            "doc_id", "lang", f"{bucket_sql} AS bucket", "tok"
+        ).selectExpr(
+            "doc_id", "lang", "bucket", "tok", f"{run_sql} AS running"
+        ).selectExpr("doc_id", "lang", "bucket", "tok", f"{pack_sql} AS pack_id")
+
+    m5 = stage(
+        _build_packs, "packs",
         [m4["manifest_id"], f"budget={args.pack_budget}"],
     )
 
@@ -279,7 +255,7 @@ def run(args) -> dict:
         "decon": _rows(m3),
         "mix": _rows(m4),
         "packed_docs": _rows(m5),
-        "n_packs": packs.select("lang", "bucket", "pack_id").distinct().count(),
+        "n_packs": read("packs").select("lang", "bucket", "pack_id").distinct().count(),
         "stage_sec": stage_sec,
     }
     with open(os.path.join(args.out, "stats.json"), "w") as f:

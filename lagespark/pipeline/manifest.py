@@ -4,9 +4,8 @@ and row/byte metrics so a killed job resumes mid-tiling").
 
 Sandbox degradation (SURVEY.md §0): no Iceberg runtime jar is available, so
 "Iceberg table" degrades to Hive-partitioned parquet + a JSON manifest we
-write ourselves. The writer keeps the surface format-pluggable (`fmt`
-parameter) so a real cluster swaps in format("iceberg") and inherits its
-snapshot/manifest machinery instead of ours.
+write ourselves. Writer and reader both assume that layout; a real cluster
+would replace this module, not pass a format name to it.
 
 Manifest layout (one JSON per stage, committed atomically via temp+rename):
   {
@@ -17,11 +16,14 @@ Manifest layout (one JSON per stage, committed atomically via temp+rename):
     "complete": true
   }
 
-Resume contract: a stage with a complete manifest is skipped. An incomplete
-stage recomputes ONLY missing partitions: the input is filtered to the
-missing partition values (→ Catalyst partition pruning does the skipping)
-and written with dynamic partitionOverwriteMode so present partitions are
-left untouched.
+Stage contract (`run_stage`, the one skip-or-build decision both pipeline
+CLIs use): a stage whose complete manifest has the same inputs is never
+rebuilt — its builder is not even called. Inputs are the upstream stage's
+manifest id plus the stage's own parameters, so a rebuilt upstream or a
+changed flag rebuilds the stage. `resume` governs only an incomplete stage:
+the input is filtered to the partition values missing on disk (→ Catalyst
+partition pruning does the skipping) and written with dynamic
+partitionOverwriteMode so present partitions are left untouched.
 """
 
 from __future__ import annotations
@@ -29,34 +31,64 @@ from __future__ import annotations
 import json
 import os
 import uuid
+import warnings
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def session(master: str | None, app_name: str) -> SparkSession:
+    """The session a pipeline CLI runs in. An ACTIVE session is reused
+    untouched: embedded callers (perfbench, BENCH/scaling.py, the tests)
+    drive the CLIs from an already-configured session, and get_spark's
+    getOrCreate would apply its options TO that session — resetting
+    spark.sql.shuffle.partitions and the log level mid-run. Only a
+    standalone invocation builds its own session, logging at WARN."""
+    active = SparkSession.getActiveSession()
+    if active is None:
+        from lagespark.session import get_spark
+
+        spark = get_spark(master, app_name=app_name)
+        spark.sparkContext.setLogLevel("WARN")
+        return spark
+    if master is not None and master != active.sparkContext.master:
+        warnings.warn(
+            f"{app_name}: reusing the ACTIVE SparkSession (master="
+            f"{active.sparkContext.master!r}); --master {master!r} is ignored",
+            stacklevel=2,
+        )
+    return active
 
 
 def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_lagespark_manifest.json")
 
 
-def read_stage(spark, out_dir: str, verify: bool = True):
-    """Read a checkpointed stage back (the src-iceberg degradation's read
-    side): returns (DataFrame, manifest). With verify=True the on-disk
-    partition set is checked against the manifest — a torn write (partition
-    present on disk but absent from the committed manifest, or vice versa)
-    fails fast instead of silently serving partial data."""
+def _partition_values(out_dir: str, partition_col: str) -> set[str]:
+    """Partition values on disk, from the directory names alone."""
+    if not os.path.isdir(out_dir):
+        return set()
+    prefix = f"{partition_col}="
+    return {n[len(prefix):] for n in os.listdir(out_dir) if n.startswith(prefix)}
+
+
+def read_stage(spark, out_dir: str):
+    """Read a committed stage back (the src-iceberg degradation's read
+    side): returns (DataFrame, manifest). The on-disk partition directories
+    are checked against the manifest — a torn write (partition present on
+    disk but absent from the committed manifest, or vice versa) fails fast
+    instead of silently serving partial data."""
     man = read_manifest(out_dir)
     if man is None:
         raise FileNotFoundError(f"no manifest in {out_dir} — stage incomplete")
     if not man.get("complete"):
         raise RuntimeError(f"stage {man.get('stage')} manifest is incomplete")
-    if verify:
-        on_disk = set(_partition_metrics(out_dir, man["partition_col"]))
-        declared = set(man["partitions"])
-        if on_disk != declared:
-            raise RuntimeError(
-                f"stage {man['stage']}: partitions on disk {sorted(on_disk)} "
-                f"!= manifest {sorted(declared)}"
-            )
+    on_disk = _partition_values(out_dir, man["partition_col"])
+    if on_disk != set(man["partitions"]):
+        raise RuntimeError(
+            f"stage {man['stage']}: partitions on disk {sorted(on_disk)} "
+            f"!= manifest {sorted(man['partitions'])}"
+        )
     return spark.read.parquet(out_dir), man
 
 
@@ -74,20 +106,33 @@ def _partition_metrics(out_dir: str, partition_col: str) -> dict:
     import pyarrow.parquet as pq
 
     parts: dict[str, dict] = {}
-    for name in sorted(os.listdir(out_dir)):
-        if not name.startswith(f"{partition_col}="):
-            continue
-        val = name.split("=", 1)[1]
-        rows = 0
-        nbytes = 0
-        pdir = os.path.join(out_dir, name)
-        for f in os.listdir(pdir):
-            if f.endswith(".parquet"):
-                fp = os.path.join(pdir, f)
-                nbytes += os.path.getsize(fp)
-                rows += pq.read_metadata(fp).num_rows
-        parts[val] = {"rows": rows, "bytes": nbytes}
+    for val in sorted(_partition_values(out_dir, partition_col)):
+        pdir = os.path.join(out_dir, f"{partition_col}={val}")
+        files = [os.path.join(pdir, f) for f in os.listdir(pdir) if f.endswith(".parquet")]
+        parts[val] = {"rows": sum(pq.read_metadata(f).num_rows for f in files),
+                      "bytes": sum(os.path.getsize(f) for f in files)}
     return parts
+
+
+def run_stage(
+    build,
+    out_dir: str,
+    stage: str,
+    partition_col: str,
+    inputs: list[str],
+    resume: bool = False,
+) -> tuple[dict, bool]:
+    """The ONE skip-or-build decision for a pipeline stage; returns
+    (manifest, built). `build` — zero arguments, returns the stage's
+    DataFrame — is called only when out_dir holds no complete manifest with
+    the same `inputs`: constructing a frame can itself run jobs (the
+    iterative dedup components fire per-round actions), so a done stage
+    must not build one. resume=True keeps an incomplete stage's partitions
+    already on disk (see write_stage)."""
+    man = read_manifest(out_dir)
+    if man and man.get("complete") and man["inputs"] == inputs:
+        return man, False
+    return write_stage(build(), out_dir, stage, partition_col, inputs, resume), True
 
 
 def write_stage(
@@ -96,24 +141,17 @@ def write_stage(
     stage: str,
     partition_col: str,
     inputs: list[str] | None = None,
-    fmt: str = "parquet",
     resume: bool = False,
 ) -> dict:
-    """Write a checkpointed stage; returns its manifest. With resume=True and
-    an existing incomplete output, only missing partitions are recomputed."""
+    """Write and commit a stage; returns its manifest. With resume=True and
+    an incomplete output, only missing partitions are recomputed; over a
+    complete one (lineage invalidation: run_stage found different inputs)
+    the stage always rebuilds fully."""
     man = read_manifest(out_dir)
-    if man and man.get("complete") and man.get("inputs") == (inputs or []):
-        return man  # stage done with the SAME inputs — skip entirely
-    if man and man.get("complete"):
-        # lineage invalidation: an upstream stage recomputed (different input
-        # manifest ids) → this stage's data is stale and must rebuild fully
-        man = None
-        resume = False
-
     done_vals: set[str] = set()
-    if resume and os.path.isdir(out_dir):
+    if resume and not (man and man.get("complete")):
         # partitions already on disk (from the killed run) are kept as-is
-        done_vals = set(_partition_metrics(out_dir, partition_col))
+        done_vals = _partition_values(out_dir, partition_col)
         if done_vals:
             df = df.filter(
                 ~F.col(partition_col).cast("string").isin(sorted(done_vals))
@@ -127,7 +165,7 @@ def write_stage(
     # DELETED — otherwise stale leftovers would be re-recorded into the new
     # manifest and served as verified data
     (
-        df.write.format(fmt)
+        df.write.format("parquet")
         .option("partitionOverwriteMode", "dynamic" if done_vals else "static")
         .mode("overwrite")
         .partitionBy(partition_col)
@@ -154,12 +192,3 @@ def write_stage(
     os.replace(tmp, _manifest_path(out_dir))  # atomic commit
     return manifest
 
-
-def stage_done(out_dir: str, inputs: list[str] | None = None) -> bool:
-    """True iff the stage committed completely WITH the same inputs — lets a
-    caller skip building the stage's DataFrame entirely. This matters for
-    plans whose CONSTRUCTION runs jobs (iterative operators like
-    duplicate_components fire per-round actions while the frame is being
-    built, long before write_stage could skip the write)."""
-    man = read_manifest(out_dir)
-    return bool(man and man.get("complete") and man.get("inputs") == (inputs or []))

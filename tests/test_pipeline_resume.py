@@ -98,13 +98,15 @@ def test_full_rebuild_deletes_stale_partitions(spark, tmp_path):
     leave them on disk and the manifest would record stale data as verified."""
     out = str(tmp_path / "stale")
     df1 = spark.range(0, 30).selectExpr("id", "CAST(id % 3 AS INT) AS p")
-    manifest.write_stage(df1, out, "s", "p", inputs=["m1"])
+    man1 = manifest.write_stage(df1, out, "s", "p", inputs=["m1"])
     assert sorted(manifest.read_manifest(out)["partitions"]) == ["0", "1", "2"]
 
     # rebuild with DIFFERENT inputs (lineage invalidation) and fewer partitions
     df2 = spark.range(0, 20).selectExpr("id", "CAST(id % 2 AS INT) AS p")
     man2 = manifest.write_stage(df2, out, "s", "p", inputs=["m2"])
     assert sorted(man2["partitions"]) == ["0", "1"]
+    # the replaced manifest's id is kept as the stage's snapshot history
+    assert man2["snapshots"] == [man1["manifest_id"]]
     on_disk = sorted(
         d.split("=", 1)[1] for d in os.listdir(out) if d.startswith("p=")
     )
@@ -171,12 +173,31 @@ def test_read_stage_verifies_manifest(spark, fresh_run, tmp_path):
         read_stage(spark, victim)
 
 
+class _Built(Exception):
+    pass
+
+
+def _builds(out_dir, inputs) -> bool:
+    """True iff run_stage would (re)build the stage for these inputs: the
+    builder raises before anything is written."""
+
+    def build():
+        raise _Built
+
+    try:
+        manifest.run_stage(build, out_dir, "probe", "lang", inputs)
+    except _Built:
+        return True
+    return False
+
+
 def test_corpus_pipeline_end_to_end_and_resume(spark, tmp_path):
     """The text-corpus pipeline (clean → dedup → decon → mix → pack) runs
-    end-to-end with committed manifests, and a --resume rerun skips every
-    stage (stage_done short-circuits BEFORE the iterative dedup builder
-    would fire its per-round jobs) while reproducing identical stats."""
-    from lagespark.pipeline import corpus, manifest
+    end-to-end with committed manifests, and a re-run — with or without
+    --resume — skips every stage (run_stage never calls the builder, so the
+    iterative dedup builder fires none of its per-round jobs) while
+    reproducing identical stats."""
+    from lagespark.pipeline import corpus
 
     out = str(tmp_path / "corpus")
     args = corpus.build_parser().parse_args(
@@ -189,8 +210,8 @@ def test_corpus_pipeline_end_to_end_and_resume(spark, tmp_path):
     vals = [stats[k] for k in order]
     assert vals == sorted(vals, reverse=True) and vals[-1] > 0
     assert stats["n_packs"] > 0
-    # the EXACT resume-skip predicate run() uses: stage_done with the
-    # upstream manifest id as inputs — true for every stage in the chain.
+    # the EXACT skip decision run() uses: run_stage with the upstream
+    # manifest id as inputs does not build any stage in the chain.
     # Stage 1's input is the SOURCE fingerprint (path + file sizes/mtimes),
     # so pointing the same --out at a different/regenerated --sf-dir
     # invalidates the whole chain instead of serving the stale clean stage.
@@ -211,27 +232,81 @@ def test_corpus_pipeline_end_to_end_and_resume(spark, tmp_path):
         inputs = [manifest.read_manifest(f"{out}/{u}")["manifest_id"] for u in ups]
         if st == "clean":
             inputs = [src_fp]
-        assert manifest.stage_done(f"{out}/{st}", inputs + params[st]), st
+        assert not _builds(f"{out}/{st}", inputs + params[st]), st
     # lineage invalidation: a REBUILT upstream (different manifest_id) must
-    # flip downstream stage_done to False — stale data is never served
+    # rebuild the downstream stage — stale data is never served
     dedup_id = manifest.read_manifest(f"{out}/clean")["manifest_id"]
-    assert not manifest.stage_done(
-        f"{out}/dedup", ["not-the-real-id"] + params["dedup"]
-    )
-    # ...a CHANGED source must flip stage 1 itself (ADVICE round-4 fix)
-    assert not manifest.stage_done(
-        f"{out}/clean", ["src:/other:deadbeef"] + params["clean"]
-    )
-    # ...and a CHANGED stage parameter must flip the stage on its own
-    assert not manifest.stage_done(
+    assert _builds(f"{out}/dedup", ["not-the-real-id"] + params["dedup"])
+    # ...a CHANGED source must rebuild stage 1 itself (ADVICE round-4 fix)
+    assert _builds(f"{out}/clean", ["src:/other:deadbeef"] + params["clean"])
+    # ...and a CHANGED stage parameter must rebuild the stage on its own
+    assert _builds(
         f"{out}/dedup", [dedup_id, "perms=8", "band_rows=2", "jaccard=0.9"]
     )
 
-    args2 = corpus.build_parser().parse_args(
-        ["--out", out, "--sf-dir", "/root/testdata/sf0.001", "--resume"]
-    )
-    stats2 = corpus.run(args2)
-    # stage_sec is wall-time (round-6 instrumentation): a fully-resumed run
-    # records 0.0 per stage; every data stat must be identical
-    assert stats2.pop("stage_sec") == {k: 0.0 for k in stats["stage_sec"]}
-    assert {k: v for k, v in stats.items() if k != "stage_sec"} == stats2
+    # stage_sec is wall-time (round-6 instrumentation): a re-run that builds
+    # nothing records 0.0 per stage; every data stat must be identical.
+    # Without --resume too: --resume only governs an incomplete stage's
+    # leftover partitions, never whether a complete stage is rebuilt
+    for flags in (["--resume"], []):
+        args2 = corpus.build_parser().parse_args(
+            ["--out", out, "--sf-dir", args.sf_dir] + flags
+        )
+        stats2 = corpus.run(args2)
+        assert stats2.pop("stage_sec") == {k: 0.0 for k in stats["stage_sec"]}
+        assert {k: v for k, v in stats.items() if k != "stage_sec"} == stats2
+
+
+def test_image_flag_change_rebuilds_stale_stages(spark, tmp_path):
+    """Every flag that changes stage 1's rows is in its inputs: re-running
+    into the same --out with more images or another cell size rebuilds
+    images and, through the manifest-id chain, everything downstream — with
+    or without --resume — while an unchanged re-run rebuilds nothing."""
+    out = str(tmp_path / "flags")
+
+    def run(n, *flags):
+        return cli.run(cli.build_parser().parse_args(
+            ["--out", out, "--n-images", str(n), "--partitions", "2",
+             "--master", "local[4]", *flags]))
+
+    def rows(m):
+        return sum(p["rows"] for p in m["partitions"].values())
+
+    first = run(60)
+    assert rows(first["images"]) == 60
+    for flags in ([], ["--resume"]):
+        again = run(60, *flags)
+        assert {s: m["manifest_id"] for s, m in again.items()} == {
+            s: m["manifest_id"] for s, m in first.items()}
+    more = run(90, "--resume")
+    assert rows(more["images"]) == rows(more["zones"]) == 90
+    assert rows(more["scores"]) > 0
+    assert more["scores"]["manifest_id"] != first["scores"]["manifest_id"]
+    coarse = run(90, "--cell-size", "500")
+    assert coarse["images"]["inputs"] != more["images"]["inputs"]
+    assert rows(coarse["images"]) == 90
+    # fewer tiles at 4x the tile area
+    assert rows(coarse["tiles"]) < rows(more["tiles"])
+
+
+def test_cli_reuses_active_session_untouched(spark, tmp_path):
+    """An embedding caller's session keeps its SQL conf through a CLI run,
+    and only a --master that differs from the active one warns."""
+    import warnings
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        base = ["--out", str(tmp_path / "sess"), "--n-images", "40",
+                "--partitions", "2"]
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            cli.run(cli.build_parser().parse_args(base))
+            cli.run(cli.build_parser().parse_args(
+                base + ["--master", spark.sparkContext.master]))
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert not [w for w in caught if "ACTIVE SparkSession" in str(w.message)]
+        with pytest.warns(UserWarning, match="ACTIVE SparkSession"):
+            manifest.session("local[1]", "lagespark-test")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)

@@ -12,8 +12,9 @@
   eps-expanded clip path (an inclusive-boundary point floors into them)
 - knn_join_points stays exact when query ids are duplicated (the pending
   loop no longer relies on unique-qid arithmetic)
-- q100 decontamination broadcasts the benchmark shingle set (corpus side
-  never shuffles for the semi-join)
+
+The decontamination and sequence-packing pins live in test_decontaminate.py
+and test_doc_pack.py.
 """
 
 from __future__ import annotations
@@ -258,120 +259,3 @@ def test_s2_native_plan_has_no_python_udf(spark):
     plan = buf.getvalue()
     assert "EvalPython" not in plan  # no ArrowEvalPython/BatchEvalPython
     assert "codegen id" in plan  # formatted mode marks codegen stages this way
-
-
-def test_decontaminate_plan_broadcasts_benchmark(spark):
-    """q100 shape: the benchmark shingle set rides a BroadcastHashJoin (the
-    corpus side must not shuffle for the semi-join) and the query registers
-    with a matching oracle."""
-    import io
-    from contextlib import redirect_stdout
-
-    from lagespark import harness
-    from lagespark import harness4  # noqa: F401
-
-    assert "q100-decontaminate" in harness.ORACLES
-    df = harness.QUERIES["q100-decontaminate"](spark, "/root/testdata/sf0.001")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_decontaminate_hashed_keys_match_string_path(spark):
-    """hash_keys=True (production 8-byte xxhash64 wire format, used by the
-    corpus pipeline) returns exactly the string path's result on the
-    harness corpus — same contaminated ids, same per-doc hit counts."""
-    from pyspark.sql import functions as F
-
-    from lagespark.operators import dedup
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    corpus = d.filter(F.col("doc_id") % 97 != 0)
-    bench = d.filter(F.col("doc_id") % 97 == 0)
-    s = dedup.decontaminate(corpus, bench, n=20).toPandas()
-    h = dedup.decontaminate(corpus, bench, n=20, hash_keys=True).toPandas()
-    key = lambda pdf: pdf.sort_values("doc_id").reset_index(drop=True)
-    assert key(s).equals(key(h))
-    assert len(s) > 0  # the harness corpus really has contaminated docs
-
-
-def test_doc_pack_invariants(spark):
-    """Sequence-packing semantics (q101 / pipeline pack stage): packs are
-    contiguous per (lang, bucket) shard, conserve every token, and overrun
-    the budget by at most one document (greedy concat-and-chunk)."""
-    import numpy as np
-
-    from lagespark.operators import text
-
-    rng = np.random.default_rng(5)
-    rows = [
-        (int(i), ["en", "de", "fr"][i % 3], int(rng.integers(1, 400)))
-        for i in range(600)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, tok long")
-    budget = 512
-    bucket = text.pack_bucket_expr("doc_id", "spark")
-    running, pack_id = text.pack_exprs(
-        "tok", ("lang", "bucket"), "doc_id", budget
-    )
-    packed = (
-        df.selectExpr("doc_id", "lang", f"{bucket} AS bucket", "tok")
-        .selectExpr("doc_id", "lang", "bucket", "tok", f"{running} AS running")
-        .selectExpr("doc_id", "lang", "bucket", "tok", f"{pack_id} AS pack_id")
-        .toPandas()
-    )
-    assert packed["tok"].sum() == sum(r[2] for r in rows)  # token conservation
-    assert packed["bucket"].between(0, 15).all()
-    assert packed["bucket"].nunique() > 4  # the md5 sub-shard really spreads
-    for (lang, bkt), g in packed.groupby(["lang", "bucket"]):
-        ids = sorted(g["pack_id"].unique())
-        assert ids == list(range(len(ids)))  # contiguous pack ids per shard
-        per = g.groupby("pack_id")["tok"].agg(["sum", "max"])
-        # greedy overrun bound: a pack exceeds the budget only by (part of)
-        # its final document
-        assert (per["sum"] < budget + per["max"]).all()
-
-
-def test_doc_pack_bucket_parity_and_window_partitioning(spark, duck):
-    """The hash sub-shard is dialect-portable (Spark and DuckDB decode the
-    same md5 digit to the same bucket for the same ids) AND the physical
-    window really partitions by (lang, bucket), not lang alone — the q101
-    scale fix: no single reducer holds a whole language."""
-    import io
-    from contextlib import redirect_stdout
-
-    from lagespark import harness
-    from lagespark import harness4  # noqa: F401  (registers q101)
-    from lagespark.operators import text
-
-    ids = list(range(0, 4000, 7))
-    sdf = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    s_bkt = {
-        r["doc_id"]: r["bucket"]
-        for r in sdf.selectExpr(
-            "doc_id", text.pack_bucket_expr("doc_id", "spark") + " AS bucket"
-        ).collect()
-    }
-    d_expr = text.pack_bucket_expr("doc_id", "duckdb")
-    d_rows = duck.execute(
-        f"SELECT doc_id, {d_expr} AS bucket FROM "
-        f"(SELECT unnest({ids}) AS doc_id)"
-    ).fetchall()
-    assert {i: b for i, b in d_rows} == s_bkt
-    assert set(s_bkt.values()) == set(range(16))
-
-    df = harness.QUERIES["q101-doc-pack"](spark, "/root/testdata/sf0.001")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    import re
-
-    m = re.search(
-        r"windowspecdefinition\((\w+)#\d+L?, (\w+)#\d+L?, (\w+)#\d+L? ASC", plan
-    )
-    assert m, f"no window spec found in plan:\n{plan}"
-    assert m.groups() == ("lang", "bucket", "doc_id")

@@ -1,7 +1,7 @@
 """Round-6 hardening pins: the S2 lattice snap (three-engine parity on
 lattice-adjacent points), lsh_topk's skinny bucket join (no vector column
-below the bucket exchange), q95's single-scan plan, and the decontaminate
-benchmark-side _spread."""
+below the bucket exchange) and q95's single-scan plan. The decontaminate
+benchmark-side _spread pin lives in test_decontaminate.py."""
 
 from __future__ import annotations
 
@@ -196,32 +196,6 @@ def test_q95_plan_single_events_scan(spark):
     # one file-scan detail block (each scan prints a Location: line once)
     assert plan.count("Location: InMemoryFileIndex") == 1, plan
     assert "Join" not in plan
-
-
-# ---------------------------------------------------------------------------
-# decontaminate benchmark-side _spread (VERDICT r5 #5)
-# ---------------------------------------------------------------------------
-
-
-def test_decontaminate_benchmark_side_parallel(spark):
-    """The benchmark shingle projection must not run on a single partition
-    when the benchmark arrives as one small file/partition."""
-    from lagespark.operators import dedup
-
-    corpus = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": [1, 2], "text": ["the quick brown fox " * 20, "zz" * 50]}
-        )
-    )
-    bench = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [9], "text": ["the quick brown fox " * 20]})
-    ).coalesce(1)
-    out = dedup.decontaminate(corpus, bench, n=40)
-    rows = {r["doc_id"]: r["n_hits"] for r in out.collect()}
-    assert 1 in rows and 2 not in rows
-    spread = dedup._spread(bench.select("text"))
-    par = spark.sparkContext.defaultParallelism
-    assert spread.rdd.getNumPartitions() >= par
 
 
 # ---------------------------------------------------------------------------
