@@ -66,30 +66,6 @@ def grid_cover_bbox(
     return (ii.ravel() + GRID_OFF) * (1 << GRID_SHIFT) + (jj.ravel() + GRID_OFF)
 
 
-def grid_ring_cells(cell: int, k: int) -> np.ndarray:
-    """Cells at Chebyshev distance exactly k from `cell` (k=0 → itself)."""
-    i, j = grid_decode(np.array([cell]))
-    i, j = int(i[0]), int(j[0])
-    if k == 0:
-        return np.array([cell], dtype=np.int64)
-    out = []
-    for di in range(-k, k + 1):
-        for dj in range(-k, k + 1):
-            if max(abs(di), abs(dj)) == k:
-                out.append((i + di + GRID_OFF) * (1 << GRID_SHIFT) + (j + dj + GRID_OFF))
-    return np.asarray(out, dtype=np.int64)
-
-
-def grid_disk_cells(cell: np.ndarray, k: int) -> np.ndarray:
-    """(N, (2k+1)^2) neighbor cells within Chebyshev distance k, vectorized."""
-    i, j = grid_decode(cell)
-    d = np.arange(-k, k + 1)
-    di, dj = np.meshgrid(d, d)
-    di = di.ravel()[None, :]
-    dj = dj.ravel()[None, :]
-    return (i[:, None] + di + GRID_OFF) * (1 << GRID_SHIFT) + (j[:, None] + dj + GRID_OFF)
-
-
 # ---------------------------------------------------------------------------
 # S2-family sphere cells
 # ---------------------------------------------------------------------------

@@ -1,5 +1,5 @@
-"""The checkpoint discipline: ONE helper for every operator-level
-localCheckpoint that either carries statistics or overlaps with another.
+"""The checkpoint discipline: ONE helper for operator-level localCheckpoints
+— the ones that carry statistics, overlap with another, or are eager.
 
 Statistics ride the checkpoint's own job: each frame is `observe`d before an
 EAGER `localCheckpoint`, so a driver-side decision (is any pair general? how

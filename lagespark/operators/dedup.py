@@ -809,15 +809,14 @@ def minhash_jaccard_pairs(
         perms, band_rows = fit_banding_matched(threshold)
     elif band_rows is None:
         band_rows = fit_band_rows(perms, threshold)
-    cand = minhash_pairs_fast(df, id_col, text_col, perms, band_rows, n)
     # cand feeds BOTH the candidate-id semi-join below and the pair join —
-    # EAGER checkpoint, same reasoning as components() at :474: the two
-    # consumers are different plans (no exchange reuse), and with a lazy
+    # EAGER checkpoint, same reasoning as duplicate_components' pairs: the
+    # two consumers are different plans (no exchange reuse), and with a lazy
     # checkpoint their stages launch concurrently, each computing the banded
     # pair generation before the other's cache lands (measured: the 8-core
     # refine level got SLOWER with eager=False). Eager materializes the
     # (skinny a,b) pair list once, before either branch runs.
-    cand = cand.localCheckpoint(eager=True)
+    ((cand, _),) = checkpoint(minhash_pairs_fast(df, id_col, text_col, perms, band_rows, n))
     # round 6: only docs that appear in SOME candidate pair pay the hashed-
     # shingle projection. At realistic (~0.1%) near-dup density with
     # threshold-matched bands, candidates touch a tiny fraction of the
@@ -961,76 +960,74 @@ def hamming_pairs(
     )
 
 
-def duplicate_components(
-    pairs: DataFrame, max_iters: int = 20, check_every: int = 2
-) -> DataFrame:
+def duplicate_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """(a, b) candidate-duplicate pairs → (doc, component) where component is
     the minimum doc id reachable through the pair graph (the canonical
     representative each duplicate cluster keeps).
 
-    Iterative min-label propagation over DataFrames: each round joins every
-    node's current label against its neighbors' and takes the min, until a
-    fixpoint. Rounds needed = graph diameter; duplicate clusters are shallow
-    in practice. This is the standard large-scale connected-components shape
+    Iterative min-label propagation over DataFrames: each round every node
+    takes the min of its own label and its neighbors' labels, until a
+    fixpoint. This is the standard large-scale connected-components shape
     (hash-partitioned joins, no driver materialization of the graph).
+    Neighbor propagation alone needs rounds ~ graph diameter, so each round
+    also HOOKS and JUMPS (Shiloach–Vishkin style): a node's previous label
+    — itself a node id — takes the node's current label, and every label
+    then follows one pointer to its own label. A 200-node path then closes
+    in 9-11 rounds instead of 34-93.
 
-    ONE job per round: the previous label is folded into the round's plan and
-    the convergence count runs on the LAZY localCheckpoint, so a single
-    action both materializes the checkpoint (truncating lineage) and returns
-    the changed-count — no second recompute job per round. Pointer doubling
-    makes single-round convergence checks mostly redundant (the remaining
-    diameter halves each round), so the count action only fires every
-    `check_every` rounds — the uncounted rounds stay fully lazy and
-    materialize inside the next counted round's single job."""
+    Each round is ONE eager checkpoint (operators.checkpoint): the previous
+    label is folded into the round's plan, and the checkpoint's own job both
+    truncates the lineage and counts the labels that changed — the stop
+    test needs no job of its own. No change means every edge joins equal
+    labels, so each component carries its minimum id."""
     # single-execution guard (the repo's two-union-branch invariant): the
     # forward/reverse edge projections below prune differently, so WITHOUT
     # this checkpoint the upstream pair-generation plan (LSH + exact
     # Jaccard — the expensive part) executes TWICE inside the edges job
     # (measured 15.1 s vs 10.0 s for one pairs pass at 240k docs)
-    pairs = pairs.localCheckpoint(eager=True)
-    edges = (
+    ((pairs, _),) = checkpoint(pairs)
+    # the edge list is checkpointed too: it feeds every round and lineage
+    # must stay truncated across iterations
+    ((edges, _),) = checkpoint(
         pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .unionByName(pairs.select(F.col("b").alias("u"), F.col("a").alias("v")))
         .distinct()
-        # checkpoint the edge list too: it feeds every round and lineage
-        # must stay truncated across iterations
-        .localCheckpoint(eager=True)
     )
+    # (node, label, _old = the label before the round); round 0 reads these
+    # initial labels several times in ONE plan, which reuses the distinct's
+    # exchange
     labels = (
         edges.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
+        .withColumn("_old", F.col("node"))
     )
-    labels = labels.localCheckpoint(eager=False)
-    for it in range(max_iters):
+    for _ in range(max_iters):
         cur = labels.select("node", "label")
         neigh = edges.join(cur, edges.v == cur.node).select(
             F.col("u").alias("node"), "label"
         )
+        # hook: the node a label names learns the label its holder reached
+        # last round (any label of a node is a node of the same component)
+        hook = labels.select(F.col("_old").alias("node"), "label")
         merged = (
             cur.unionByName(neigh)
+            .unionByName(hook)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
         )
-        # pointer doubling: follow label → label's OWN label in the same
-        # round (labels are node ids, so a self-join resolves one hop) —
-        # remaining diameter halves per round, so convergence is
-        # O(log diameter) rounds instead of O(diameter)
+        # jump: follow label → label's OWN label (labels are node ids, so a
+        # self-join resolves one hop)
         l2 = merged.select(F.col("node").alias("label"), F.col("label").alias("_l2"))
         merged = merged.join(l2, "label").select(
             "node", F.least("label", "_l2").alias("label")
         )
-        staged = merged.join(
-            labels.select("node", F.col("label").alias("_old")), "node"
-        ).localCheckpoint(eager=False)
-        labels = staged
-        if (it + 1) % check_every == 0 or it == max_iters - 1:
-            # the only action in `check_every` rounds: one job materializes
-            # every stacked lazy checkpoint (truncating lineage) AND returns
-            # the convergence metric
-            changed = staged.filter(F.col("label") != F.col("_old")).count()
-            if changed == 0:
-                break
+        ((labels, st),) = checkpoint(
+            merged.join(labels.select("node", F.col("label").alias("_old")), "node"),
+            changed=F.count_if(F.col("label") != F.col("_old")),
+        )
+        if st["changed"] == 0:
+            break
     return labels.select(F.col("node").alias("doc"), F.col("label").alias("component"))
 
 

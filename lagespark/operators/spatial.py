@@ -436,32 +436,24 @@ def range_join(
     return l.join(r, "cell").where(dist < d).drop("cell").withColumn("dist", F.round(dist, 6))
 
 
-def knn_auto_cell_size(
-    targets: DataFrame, k: int, x: str = "x", y: str = "y", per_disk: float = 16.0
-) -> float:
-    """Density-adaptive grid size for knn_join_points: pick the cell so the
+def knn_auto_cell_size(stats: dict, k: int, per_disk: float = 16.0) -> float:
+    """Density-adaptive grid size for knn_join_points, from the target
+    base's checkpoint stats (n, x0, x1, y0, y1): pick the cell so the
     radius-1 disk (9 cells) holds ≈ per_disk·k targets. per_disk trades
     candidate volume against round count: the round-1 closure test needs
     the k-th distance under one cell size, and the k-th neighbor sits at
     ~sqrt(k/(π·density)), so per_disk·k ≳ 40 closes almost every query in
     round 1 while still generating orders of magnitude fewer candidates than
     a fixed cell on dense data (a fixed 250 m cell at 100× density would
-    put tens of thousands of candidates in every disk). One cheap
-    partial-aggregated stats pass (count + bbox)."""
-    st = targets.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(x).alias("x0"),
-        F.max(x).alias("x1"),
-        F.min(y).alias("y0"),
-        F.max(y).alias("y1"),
-    ).first()
-    if not st["n"]:
+    put tens of thousands of candidates in every disk). Empty or degenerate
+    (zero-area) targets get the default 250.0."""
+    if not stats["n"]:
         # empty targets: min/max are None — bail before the arithmetic
         return 250.0
-    area = (st["x1"] - st["x0"]) * (st["y1"] - st["y0"])
+    area = (stats["x1"] - stats["x0"]) * (stats["y1"] - stats["y0"])
     if area <= 0:
         return 250.0
-    density = st["n"] / area
+    density = stats["n"] / area
     return float(np.clip(np.sqrt(per_disk * k / (9.0 * density)), 1e-6, 1e7))
 
 
@@ -487,10 +479,15 @@ def knn_join_points(
       candidates CARRIED from earlier rounds (a query's previous top-k
       dominates every other previously-seen candidate, so carrying top-k is
       lossless), and ranks by (rounded distance, id). A query is DONE when
-      it has ≥ k candidates AND its k-th distance < r·cell_size — no point
-      in an unexplored cell can beat that (cells at Chebyshev distance > r
-      are ≥ r·cell_size away). Unfinished queries continue with r doubled;
-      the pending set shrinks geometrically (a tiny driver count per round).
+      its rank-k distance < r·cell_size — no point in an unexplored cell
+      can beat that (cells at Chebyshev distance > r are ≥ r·cell_size
+      away). Unfinished queries continue with r doubled.
+
+    Every Spark job the build fires is an eager checkpoint whose stats feed
+    a decision (operators.checkpoint): the target base (its count and bbox
+    pick the automatic cell), the deduplicated query set (its count), and
+    ONE per round — the round's top-k, whose own job counts the queries it
+    closed. The loop stops when those counts reach the query count.
 
     Scale shape: each round is one shuffle keyed on uniform cell ids; the
     target side is never replicated (queries explode, targets don't); only
@@ -504,37 +501,42 @@ def knn_join_points(
     the result is cell-size-independent, only round counts change."""
     from pyspark.sql import Window
 
-    # checkpoint the skinny target base ONCE (round 8): the target table is
-    # re-joined in EVERY expansion round, and the density stats pass reads
-    # it too — without persistence each of those re-runs the upstream plan
-    # (for harness points that is a full scan + dedup aggregate per round).
-    # Lazy: materializes inside the first consumer's job.
-    tbase = targets.select(
-        F.col(id_col).alias("nn_id"), F.col(x).alias("tx"), F.col(y).alias("ty")
-    ).localCheckpoint(eager=False)
-
-    if cell_size is None:
-        cell_size = knn_auto_cell_size(tbase, k, "tx", "ty")
-
-    t = with_grid_cell(tbase, "tx", "ty", cell_size)
     # ONE query row per id: duplicate qids (synthesized keys are not unique
     # — CLAUDE.md) would duplicate every candidate inside the per-qid window
     # and corrupt ranks (rank 2 becomes a repeat of rank 1, pushing the true
     # k-th neighbor out). Deterministic pick: INDEPENDENT per-column MINs —
     # the repo-wide dedup convention (oracles.POINTS_SELECT, points_df), so
-    # an oracle deduping the same way sees the same coordinates. The agg is
-    # map-side combinable and skinny (3 cols), so the extra shuffle is cheap
-    # relative to the ring-join rounds it protects.
+    # an oracle deduping the same way sees the same coordinates. The unique
+    # qids also make the closed-query counts below exact.
     q0 = (
-        queries.select(
-            F.col(id_col).alias("qid"), F.col(x).alias("qx"), F.col(y).alias("qy")
-        )
-        .groupBy("qid")
-        .agg(F.min("qx").alias("qx"), F.min("qy").alias("qy"))
+        queries.select(F.col(id_col).alias("id"), F.col(x).alias("x"), F.col(y).alias("y"))
+        .groupBy("id")
+        .agg(F.min("x").alias("x"), F.min("y").alias("y"))
     )
-    pending = with_grid_cell(q0, "qx", "qy", cell_size).select(
-        "qid", "qx", "qy", F.col("cell").alias("qcell")
+    # the skinny target base is re-joined in EVERY expansion round and the
+    # query set feeds every round's pending set, so both are materialized
+    # once, in ONE call (their scans overlap); the target count and bbox
+    # pick the automatic cell, the query count is the loop's stop target
+    (tbase, tstats), (qbase, qstats) = checkpoint(
+        targets.select(F.col(id_col).alias("id"), F.col(x).alias("x"), F.col(y).alias("y")),
+        q0,
+        n=F.count(F.lit(1)),
+        x0=F.min("x"),
+        x1=F.max("x"),
+        y0=F.min("y"),
+        y1=F.max("y"),
     )
+    if cell_size is None:
+        cell_size = knn_auto_cell_size(tstats, k)
+
+    t = with_grid_cell(tbase, "x", "y", cell_size).select(
+        F.col("id").alias("nn_id"), F.col("x").alias("tx"), F.col("y").alias("ty"), "cell"
+    )
+    pending = with_grid_cell(qbase, "x", "y", cell_size).select(
+        F.col("id").alias("qid"), F.col("x").alias("qx"), F.col("y").alias("qy"),
+        F.col("cell").alias("qcell"),
+    )
+    n_open = qstats["n"]
     shift = F.lit(1 << cells.GRID_SHIFT)
 
     def explode_ij(df: DataFrame, iseq, jseq) -> DataFrame:
@@ -546,16 +548,10 @@ def knn_join_points(
 
     results = None
     carried = None  # (qid, nn_id, dist) top-k so far for still-pending queries
-    topk = None
-    done = None
+    w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("nn_id"))
+    done = F.col("done")
     r, rp = 1, 0
-    # convergence action cadence: every round for the first two (pending
-    # shrinks geometrically, most queries close there), then every
-    # `check_every` rounds (dedup.duplicate_components pattern) — uncounted
-    # rounds stay fully lazy and their checkpoints materialize inside the
-    # next counted round's single job
-    check_every = 2
-    for it in range(max_rounds):
+    for _ in range(max_rounds):
         qi = (F.col("qcell") / shift).cast("long")
         qj = F.col("qcell") % shift
         if rp == 0:
@@ -588,49 +584,33 @@ def knn_join_points(
             .select("qid", "nn_id", "dist")
         )
         all_cand = new_cand if carried is None else new_cand.unionByName(carried)
-        w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("nn_id"))
-        # topk is THE round's checkpoint: finished, carried, and done all
-        # derive from it, so the round's annulus join + window/rank executes
-        # exactly once (checkpointing only the derived frames would re-run
-        # that lineage once per consumer)
-        topk = (
+        # STRICT <: a point in an unexplored cell can sit at exactly
+        # r·cell_size (lattice coordinates) and tie-break ahead on id. The
+        # rank-k distance comes from a second window over the same qid
+        # partition (no extra shuffle); a query with < k candidates has no
+        # rank-k row and stays open.
+        kd = F.max(F.when(F.col("rank") == k, F.col("dist"))).over(Window.partitionBy("qid"))
+        # topk is THE round's checkpoint: finished, carried and the next
+        # pending set all derive from it, and its own job counts the
+        # queries this round closed (one rank-1 row per qid)
+        ((topk, st),) = checkpoint(
             all_cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .select("qid", "nn_id", "dist", "rank")
-            .localCheckpoint(eager=False)
+            .withColumn("done", F.coalesce(kd < F.lit(float(r) * cell_size), F.lit(False)))
+            .select("qid", "nn_id", "dist", "rank", "done"),
+            n_done=F.count_if(done & (F.col("rank") == 1)),
         )
-        kth = topk.groupBy("qid").agg(
-            F.max("dist").alias("kd"), F.count(F.lit(1)).alias("nc")
-        )
-        # STRICT <: a point in an unexplored cell can sit at exactly
-        # r·cell_size (lattice coordinates) and tie-break ahead on id.
-        # Checkpointed (tiny): `done` feeds the results union, the pending
-        # anti-join, AND the carried anti-join.
-        done = (
-            kth.filter(
-                (F.col("nc") >= k) & (F.col("kd") < F.lit(float(r) * cell_size))
-            )
-            .select("qid")
-            .localCheckpoint(eager=False)
-        )
-        finished = topk.join(done, "qid")
+        finished = topk.filter(done).drop("done")
         results = finished if results is None else results.unionByName(finished)
-        pending = pending.join(done, pending.qid == done.qid, "left_anti")
-        # carry the pending queries' current top-k into the next round —
-        # cheap derivation from the checkpointed topk, no extra checkpoint
-        carried = topk.join(done, "qid", "left_anti").select("qid", "nn_id", "dist")
-        if it < 2 or (it + 1) % check_every == 0 or it == max_rounds - 1:
-            # the counted round's ONLY action: materializes every stacked
-            # lazy checkpoint and returns the convergence metric. A direct
-            # pending count (not `finished.count() // k` arithmetic) stays
-            # exact when query ids are NOT unique — synthesized keys from
-            # lineitem are not (CLAUDE.md), and under-decrementing would
-            # waste all max_rounds on empty jobs.
-            if pending.count() == 0:
-                return results
+        n_open -= st["n_done"]
+        if n_open == 0:
+            return results
+        pending = pending.join(topk.filter(done).select("qid"), "qid", "left_anti")
+        # carry the pending queries' current top-k into the next round
+        carried = topk.filter(~done).select("qid", "nn_id", "dist")
         rp, r = r, r * 2
     # max_rounds exhausted: emit best-effort for the stragglers (sparse data)
-    return results.unionByName(topk.join(done, "qid", "left_anti")) if results is not None else topk
+    return results.unionByName(topk.filter(~done).drop("done"))
 
 
 def knn_join(
@@ -1423,28 +1403,6 @@ def intersects_join_ri(
 # ---------------------------------------------------------------------------
 # explicit skew salting (geo-salt)
 # ---------------------------------------------------------------------------
-
-
-def auto_salt_factor(
-    fact: DataFrame,
-    cell_col: str = "cell",
-    target_rows_per_partition: int = 500_000,
-    max_salt: int = 64,
-) -> int:
-    """Adaptive salting factor from a cheap stats pass (SURVEY.md §2.3
-    geo-salt: 'S adaptive from groupBy(cell).count() stats'): S = hottest
-    cell count / target rows per shuffle partition, clamped to [1, max_salt].
-    Runs one partial-aggregated count over the fact table — at 100 TB that
-    is a single cheap map-side-combined pass (or run it on a sample)."""
-    hot = (
-        fact.groupBy(cell_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("m"))
-        .first()["m"]
-    )
-    if not hot:
-        return 1
-    return max(1, min(max_salt, int(np.ceil(hot / target_rows_per_partition))))
 
 
 def salted_cell_join(

@@ -539,3 +539,57 @@ def test_minhash_jaccard_pairs_derives_banding(spark, monkeypatch):
     # perms given, band_rows derived threshold-matched for that perms
     dedup.minhash_jaccard_pairs(docs, threshold=0.8, perms=24).count()
     assert seen["banding"] == (24, dedup.fit_band_rows(24, 0.8)) == (24, 6)
+
+
+def _union_find_components(pairs) -> dict:
+    parent: dict = {}
+
+    def find(u):
+        while parent.setdefault(u, u) != u:
+            parent[u] = parent[parent[u]]
+            u = parent[u]
+        return u
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {u: find(u) for u in parent}
+
+
+def test_duplicate_components_matches_union_find(spark, monkeypatch):
+    """(doc, component = min id of its cluster) equals a pure-Python
+    union-find on a seeded graph: a 200-node path (forces several
+    pointer-doubling rounds), a 60-node star and an isolated pair, with
+    shuffled ids and edge directions. Every round is ONE checkpoint whose
+    own stat stops the loop; an empty input gives no rows."""
+    import numpy as np
+
+    from lagespark.operators import dedup
+
+    rng = np.random.default_rng(7)
+    ids = [int(i) for i in rng.permutation(10_000)[:262]]
+    path, star, pair = ids[:200], ids[200:260], ids[260:]
+    pairs = [(path[i], path[i + 1]) for i in range(199)]
+    pairs += [(star[0], leaf) for leaf in star[1:]]
+    pairs += [tuple(pair)]
+    pairs = [(a, b) if rng.random() < 0.5 else (b, a) for a, b in pairs]
+    df = spark.createDataFrame(pairs, "a long, b long")
+
+    rounds = []
+    real = dedup.checkpoint
+
+    def spy(*frames, **stats):
+        out = real(*frames, **stats)
+        if "changed" in stats:
+            rounds.append(out[0][1]["changed"])
+        return out
+
+    monkeypatch.setattr(dedup, "checkpoint", spy)
+    got = {r.doc: r.component for r in dedup.duplicate_components(df).collect()}
+    assert got == _union_find_components(pairs)
+    assert len(got) == 262 and len(set(got.values())) == 3
+    assert len(rounds) >= 4 and rounds[-1] == 0 and all(rounds[:-1])
+
+    empty = spark.createDataFrame([], "a long, b long")
+    assert dedup.duplicate_components(empty).count() == 0

@@ -37,15 +37,6 @@ def test_grid_sql_matches_numpy():
     assert (got == want).all()
 
 
-def test_grid_ring_and_disk():
-    c = int(cells.grid_encode(np.array([500.0]), np.array([500.0]), 100.0)[0])
-    ring1 = cells.grid_ring_cells(c, 1)
-    assert len(ring1) == 8
-    disk1 = cells.grid_disk_cells(np.array([c]), 1)
-    assert disk1.shape == (1, 9)
-    assert set(ring1.tolist()) | {c} == set(disk1[0].tolist())
-
-
 def test_grid_cover_bbox_conservative():
     cover = set(cells.grid_cover_bbox(100.0, 100.0, 900.0, 450.0, 250.0).tolist())
     rng = np.random.default_rng(3)

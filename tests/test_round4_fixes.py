@@ -6,15 +6,14 @@
   deterministic pmod(xxhash64) filter predicate (scan pruning at scale,
   independent of partition layout — deliberately NOT a Catalyst Sample
   node, whose per-partition seeding would tie the draw to layout)
-- empty-input guards: pq_topk dim probe, _train_sample_pdf, knn_auto_cell_size
+- empty-input guards: pq_topk dim probe, _train_sample_pdf
 - feature_cover_pdf covers are CONTAINMENT-conservative: boundary-aligned
   zero-width cells stay in the cover on both the rect fast path and the
   eps-expanded clip path (an inclusive-boundary point floors into them)
-- knn_join_points stays exact when query ids are duplicated (the pending
-  loop no longer relies on unique-qid arithmetic)
 
 The decontamination and sequence-packing pins live in test_decontaminate.py
-and test_doc_pack.py.
+and test_doc_pack.py; the kNN ones (duplicate query ids, empty targets) in
+test_skew_and_bucketing.py.
 """
 
 from __future__ import annotations
@@ -108,12 +107,6 @@ def test_train_sample_empty_raises(spark):
         similarity._train_sample_pdf(empty, "vec_id", "embedding", 50, seed=1)
 
 
-def test_knn_auto_cell_size_empty_targets(spark):
-    """ADVICE r3 #1: empty targets → default 250.0, not TypeError."""
-    pts = spark.createDataFrame([], "pid long, x double, y double")
-    assert spatial.knn_auto_cell_size(pts, k=3) == 250.0
-
-
 def _rect_featureset(xmin, ymin, xmax, ymax):
     ring = [
         {"x": xmin, "y": ymin},
@@ -174,38 +167,6 @@ def test_rect_cover_unaligned_keeps_full_bbox():
     feats = _rect_featureset(1.0, 1.0, 19.0, 9.0)
     cov = spatial.feature_cover_pdf(feats, cell_size=10.0, exact=True)
     assert len(cov) == 2  # i in {0,1}, j = 0
-
-
-def test_knn_join_points_duplicate_qids(spark):
-    """ADVICE r3 #5: duplicated query ids must terminate AND stay exact
-    (one top-k per distinct qid; the window merges duplicate rows)."""
-    rng = np.random.default_rng(11)
-    tgt = [(int(i), float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(0, 1000, (300, 2)))]
-    targets = spark.createDataFrame(tgt, "pid long, x double, y double")
-    # 40 query rows over only 20 distinct ids (each id appears twice with
-    # IDENTICAL coordinates — the realistic synthesized-key duplication)
-    qrows = []
-    for i, (x, y) in enumerate(rng.uniform(0, 1000, (20, 2))):
-        # qids disjoint from target ids (the join excludes nn_id == qid)
-        qrows.append((1000 + int(i), float(x), float(y)))
-        qrows.append((1000 + int(i), float(x), float(y)))
-    queries = spark.createDataFrame(qrows, "pid long, x double, y double")
-    out = spatial.knn_join_points(queries, targets, k=3).collect()
-    got = {(r.qid, r.rank): r.nn_id for r in out}
-    assert len(got) == 60  # 20 distinct qids × k
-    # brute-force oracle
-    import numpy as _np
-
-    tm = _np.array([[t[1], t[2]] for t in tgt])
-    tid = _np.array([t[0] for t in tgt])
-    assert len({(q[1], q[2]) for q in qrows}) == 20  # one coord pair per qid
-    qm = {q[0]: (q[1], q[2]) for q in qrows}
-    for qid in list(qm)[:5]:
-        x, y = qm[qid]
-        d = _np.round(_np.hypot(tm[:, 0] - x, tm[:, 1] - y), 6)
-        order = _np.lexsort((tid, d))[:3]
-        for r, j in enumerate(order):
-            assert got[(qid, r + 1)] == int(tid[j])
 
 
 # ---------------------------------------------------------------------------

@@ -475,55 +475,21 @@ def test_s2_pip_join_equals_grid_pip_join(spark):
     assert sa == sb and len(sa) > 0
 
 
-def test_auto_salt_factor(spark):
-    """Adaptive S from the hot-cell stats pass: skewed data demands salt,
-    uniform data doesn't."""
-    import pandas as pd
-
-    x, y = fixtures.image_points(30_000)
-    skewed = spatial.with_grid_cell(
-        spark.createDataFrame(pd.DataFrame({"pid": np.arange(30_000), "x": x, "y": y}))
-    )
-    s = spatial.auto_salt_factor(skewed, target_rows_per_partition=500)
-    assert s > 1, "hot urban cells must trigger salting"
-    rng = np.random.default_rng(0)
-    uniform = spatial.with_grid_cell(
-        spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "pid": np.arange(30_000),
-                    "x": rng.uniform(0, 10_000, 30_000),
-                    "y": rng.uniform(0, 10_000, 30_000),
-                }
-            )
-        )
-    )
-    u = spatial.auto_salt_factor(uniform, target_rows_per_partition=500)
-    assert u <= s
-
-
-def test_knn_join_points_exact_vs_bruteforce(spark):
-    """Ring-expansion kNN == quadratic brute force, on a mix of dense
-    clusters and far-flung outliers (outliers force several radius-doubling
-    rounds; ties break on (dist, id) in both paths)."""
-    import numpy as np
+@pytest.fixture(scope="module")
+def knn_case(spark):
+    """A mix of dense clusters and far-flung outliers (outliers force several
+    radius-doubling rounds) plus an exact-tie triple (equidistant neighbors,
+    id decides), with its quadratic brute-force top-3 (ties break on
+    (dist, id), as in knn_join_points) and each query's rank-3 distance."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from lagespark.operators import spatial
 
     rng = np.random.default_rng(3)
     pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(
         np.column_stack([rng.uniform(0, 2000, 150), rng.uniform(0, 2000, 150)])
     )]
-    # outliers several cells away (force r = 1 -> 2 -> 4 expansion)
     pts += [(1000, 9000.0, 9000.0), (1001, 9400.0, 9400.0), (1002, 12000.0, 500.0)]
-    # exact-tie pair: equidistant neighbors, id decides
     pts += [(2000, 5000.0, 5000.0), (2001, 5100.0, 5000.0), (2002, 4900.0, 5000.0)]
     df = spark.createDataFrame(pts, "pid long, x double, y double")
-
-    got = spatial.knn_join_points(df, df, k=3, cell_size=250.0).toPandas()
-    got_set = {(r.qid, r.nn_id, r.rank) for r in got.itertuples()}
 
     a = df.selectExpr("pid AS qid", "x AS qx", "y AS qy")
     b = df.selectExpr("pid AS nn_id", "x AS tx", "y AS ty")
@@ -538,14 +504,40 @@ def test_knn_join_points_exact_vs_bruteforce(spark):
         .toPandas()
     )
     brute_set = {(r.qid, r.nn_id, r.rank) for r in brute.itertuples()}
-    assert got_set == brute_set
-    assert len(got) == len(pts) * 3
+    kth = brute.loc[brute["rank"] == 3, "dist"].to_numpy()
+    return df, len(pts), brute_set, kth
 
-    # density-adaptive cell size (the default) must return the identical
-    # result set — cell size only changes round counts, never the answer
-    auto = spatial.knn_join_points(df, df, k=3).toPandas()
-    auto_set = {(r.qid, r.nn_id, r.rank) for r in auto.itertuples()}
-    assert auto_set == brute_set
+
+def _knn_set(df, **kw):
+    got = spatial.knn_join_points(df, df, k=3, **kw).toPandas()
+    return {(r.qid, r.nn_id, r.rank) for r in got.itertuples()}, len(got)
+
+
+def test_knn_join_points_exact_vs_bruteforce(spark, knn_case):
+    """Ring-expansion kNN with the density-adaptive cell (the default) ==
+    quadratic brute force."""
+    df, n, brute_set, _ = knn_case
+    got_set, n_rows = _knn_set(df)
+    assert got_set == brute_set
+    assert n_rows == n * 3
+
+
+@pytest.mark.parametrize(
+    "cell_size, rounds", [(20000.0, 1), (1000.0, 5), (250.0, 7), (100.0, 8)]
+)
+def test_knn_join_points_exact_at_every_cell_size(spark, knn_case, cell_size, rounds):
+    """The answer cannot depend on the cell size or the round count: from
+    one-round closure (every query's disk holds its 3 neighbors) to eight
+    rounds, each explicit cell returns the brute-force set. `rounds` is
+    exactly the rounds the slowest query needs to close (its rank-3
+    distance under 2^(rounds-1) cells), so no case leans on the best-effort
+    output after max_rounds."""
+    df, n, brute_set, kth = knn_case
+    need = 1 + int(np.max(np.ceil(np.log2(np.floor(kth / cell_size) + 1))))
+    assert need == rounds
+    got_set, n_rows = _knn_set(df, cell_size=cell_size, max_rounds=rounds)
+    assert got_set == brute_set
+    assert n_rows == n * 3
 
 
 def test_knn_join_points_plan_no_cartesian(spark):
@@ -591,3 +583,43 @@ def test_knn_join_points_fewer_targets_than_k(spark):
     near = spatial.knn_join_points(qs, ts, k=3, cell_size=250.0, max_rounds=4).toPandas()
     near_set = {(r.qid, r.nn_id, r.rank) for r in near.itertuples()}
     assert near_set == {(1, 10, 1), (2, 11, 1)}
+
+
+def test_knn_join_points_duplicate_qids(spark):
+    """ADVICE r3 #5: duplicated query ids must terminate AND stay exact
+    (one top-k per distinct qid; the window merges duplicate rows)."""
+    rng = np.random.default_rng(11)
+    tgt = [(int(i), float(x), float(y)) for i, (x, y) in enumerate(rng.uniform(0, 1000, (300, 2)))]
+    targets = spark.createDataFrame(tgt, "pid long, x double, y double")
+    # 40 query rows over only 20 distinct ids (each id appears twice with
+    # IDENTICAL coordinates — the realistic synthesized-key duplication)
+    qrows = []
+    for i, (x, y) in enumerate(rng.uniform(0, 1000, (20, 2))):
+        # qids disjoint from target ids (the join excludes nn_id == qid)
+        qrows.append((1000 + int(i), float(x), float(y)))
+        qrows.append((1000 + int(i), float(x), float(y)))
+    queries = spark.createDataFrame(qrows, "pid long, x double, y double")
+    out = spatial.knn_join_points(queries, targets, k=3).collect()
+    got = {(r.qid, r.rank): r.nn_id for r in out}
+    assert len(got) == 60  # 20 distinct qids × k
+    # brute-force oracle
+    tm = np.array([[t[1], t[2]] for t in tgt])
+    tid = np.array([t[0] for t in tgt])
+    assert len({(q[1], q[2]) for q in qrows}) == 20  # one coord pair per qid
+    qm = {q[0]: (q[1], q[2]) for q in qrows}
+    for qid in list(qm)[:5]:
+        x, y = qm[qid]
+        d = np.round(np.hypot(tm[:, 0] - x, tm[:, 1] - y), 6)
+        order = np.lexsort((tid, d))[:3]
+        for r, j in enumerate(order):
+            assert got[(qid, r + 1)] == int(tid[j])
+
+
+def test_knn_auto_cell_size_empty_targets(spark):
+    """ADVICE r3 #1: empty targets → default 250.0, not TypeError (an empty
+    checkpoint reports n=0 and None bounds), and the join returns no rows."""
+    none = {"n": 0, "x0": None, "x1": None, "y0": None, "y1": None}
+    assert spatial.knn_auto_cell_size(none, k=3) == 250.0
+    pts = spark.createDataFrame([(1, 0.0, 0.0)], "pid long, x double, y double")
+    empty = spark.createDataFrame([], "pid long, x double, y double")
+    assert spatial.knn_join_points(pts, empty, k=3).count() == 0
