@@ -1,8 +1,10 @@
-"""Spark jobs and seconds of the two convergence loops, A/B across checkouts.
+"""Spark jobs and seconds of operator builds, A/B across checkouts.
 
 knn_join_points (q69) and duplicate_components each decide when to stop
-from a statistic of their rounds. This script counts the Spark jobs those
-decisions cost and times them, on six cases:
+from a statistic of their rounds; intersects_join_ri and overlay_join
+decide their branches from statistics of their eager checkpoints. This
+script counts the Spark jobs those decisions cost and times them, on nine
+cases:
 
   q69.sf0.1     q69 (knn_join_points, automatic cell) at sf0.1
   q69.sf0.01    the same at sf0.01
@@ -13,6 +15,10 @@ decisions cost and times them, on six cases:
   comp.path     duplicate_components over a seeded 262-node graph: a
                 200-node path, a 60-node star and an isolated pair
   comp.empty    duplicate_components over no pairs
+  ri.200        intersects_join_ri over two 200-feature perfbench polygon
+                sides (seed 7; ~85% axis rects, the rest octagons)
+  overlay.1000  overlay_join over two 1,000-feature perfbench sides (seed 7)
+  q68.sf0.1     q68 (overlay_join over all-rect sides) at sf0.1
 
 Each case runs once untimed (warm-up), then --reps times timed in two
 phases, each under its own Spark job group: `build` is the operator call
@@ -47,7 +53,10 @@ import sys
 import tempfile
 import time
 
-CASES = ("q69.sf0.1", "q69.sf0.01", "knn250.sf0.1", "comp.corpus", "comp.path", "comp.empty")
+CASES = (
+    "q69.sf0.1", "q69.sf0.01", "knn250.sf0.1", "comp.corpus", "comp.path", "comp.empty",
+    "ri.200", "overlay.1000", "q68.sf0.1",
+)
 
 
 def _path_pairs() -> list[tuple[int, int]]:
@@ -89,6 +98,7 @@ def worker(args) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
     q69 = contract.queries()["q69-geo-knn-points"]
+    q68 = contract.queries()["q68-geo-overlay-join"]
 
     docs = spark.createDataFrame(inputs.documents(2000, 1))
     corpus_pairs = os.path.join(work, "pairs.parquet")
@@ -96,6 +106,14 @@ def worker(args) -> None:
         docs, id_col="doc_id", text_col="text", perms=8, band_rows=4, threshold=0.9
     ).select("a", "b").write.parquet(corpus_pairs)
     path_df = spark.createDataFrame(_path_pairs(), "a long, b long")
+    # perfbench's polygon sides, read before anything is timed (so a
+    # parquet schema job never lands in a build count)
+    sides = {
+        n: [spark.read.parquet(inputs.write_parquet(
+            inputs.polygon_side(n, 7, salt=k), os.path.join(work, f"side{n}_{k}")))
+            for k in (1, 2)]
+        for n in (200, 1000)
+    }
 
     def knn250(sf):
         pts = harness.points_df(spark, sf)
@@ -109,6 +127,9 @@ def worker(args) -> None:
         "comp.corpus": lambda: dedup.duplicate_components(spark.read.parquet(corpus_pairs)),
         "comp.path": lambda: dedup.duplicate_components(path_df),
         "comp.empty": lambda: dedup.duplicate_components(path_df.limit(0)),
+        "ri.200": lambda: spatial.intersects_join_ri(*sides[200]),
+        "overlay.1000": lambda: spatial.overlay_join(*sides[1000]),
+        "q68.sf0.1": lambda: q68(spark, os.path.join(args.sf_root, "sf0.1")),
     }
 
     def phase(group, fn):

@@ -184,92 +184,6 @@ def shingles_sql(text_col: str = "text", n: int = 3) -> str:
     )
 
 
-def minhash_signature(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    perms: int = 8,
-    n: int = 3,
-    keep: tuple[str, ...] = (),
-    spread: bool = True,
-) -> DataFrame:
-    """(id, mh0..mh{perms-1}): MinHash signature. Permutation p takes the
-    15-hex-char substring of md5(shingle) at offset 2p+1 and MINs it over
-    the shingle set — fixed-width lowercase hex, so string MIN == numeric
-    MIN and the identical text evaluates in any SQL engine.
-
-    One md5 per shingle serves all permutations (8× cheaper than hashing
-    (shingle, p) pairs and no row explosion). The derived permutations share
-    hash bits, which correlates bands slightly — acceptable for candidate
-    generation (verified exactly downstream); swap in independent hashes
-    per permutation where statistical guarantees matter. perms ≤ 9 with
-    15-char windows over the 32-char digest.
-
-    Computed with higher-order functions (array_min over transform) — the
-    whole signature is ONE codegen projection per document: no (doc, shingle)
-    row explosion, no groupBy shuffle. The values are identical to the
-    exploded unnest+GROUP BY formulation the DuckDB oracle runs (min over
-    the same distinct shingle set).
-
-    `keep` threads extra columns (e.g. an ingest timestamp) through the
-    signature projection; `spread=False` skips the _spread repartition —
-    required on STREAMING DataFrames (_spread probes .rdd, which streams
-    don't expose; a stream's parallelism comes from its source + the
-    downstream shuffle anyway)."""
-    assert perms <= 9
-
-    # drop docs with null/empty shingle sets: a fold over an empty/null
-    # array would keep the sentinel, and concat_ws/xxhash64 skip nulls —
-    # without this filter every null-text doc would share identical band
-    # keys in ALL bands and emit as a candidate pair with every other
-    # null-text doc. The DuckDB oracle's unnest drops these rows naturally,
-    # so the filter also keeps the dialects aligned. size(NULL) = -1, so
-    # > 0 covers both cases.
-    base = df.select(F.col(id_col), F.col(text_col), *[F.col(c) for c in keep])
-    if spread:
-        base = _spread(base)
-    sh = base.select(
-        F.col(id_col),
-        shingle_col(text_col, n, distinct=False).alias("shs"),
-        *[F.col(c) for c in keep],
-    ).filter(F.size("shs") > 0)
-    hs = sh.select(
-        F.col(id_col),
-        F.transform(F.col("shs"), lambda s: F.md5(s)).alias("hs"),
-        *[F.col(c) for c in keep],
-    )
-    # ONE aggregate fold with a struct-of-mins accumulator instead of
-    # perms×(transform + array_min) — avoids materializing `perms` derived
-    # substring arrays per document (same rationale as minhash_pairs_fast;
-    # bit-identical mins). The 'g'*15 sentinel sorts after every
-    # 15-hex-char window ('f' < 'g'), and the size>0 filter above
-    # guarantees the fold always replaces it. Lambda arity is the declared
-    # (acc, h) for aggregate's merge (repo HOF invariant).
-    init = F.struct(
-        *[F.lit("g" * 15).alias(f"m{p}") for p in range(perms)]
-    )
-
-    def _merge(acc, h):
-        return F.struct(
-            *[
-                F.least(acc[f"m{p}"], F.substring(h, 2 * p + 1, 15)).alias(
-                    f"m{p}"
-                )
-                for p in range(perms)
-            ]
-        )
-
-    return hs.select(
-        F.col(id_col),
-        F.aggregate("hs", init, _merge).alias("_mh"),
-        *[F.col(c) for c in keep],
-    ).select(
-        F.col(id_col),
-        *[F.col(f"_mh.m{p}").alias(f"mh{p}") for p in range(perms)],
-        *[F.col(c) for c in keep],
-    )
-
-
 def band_keys_md5(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -326,8 +240,15 @@ def band_keys_md5(
         F.transform(F.col("shs"), lambda s: F.md5(s)).alias("hs"),
         *[F.col(c) for c in keep],
     )
-    # same fold as minhash_signature ('g'*15 sentinel, least over 15-hex
-    # windows); finish maps the accumulator straight to the band keys.
+    # MinHash fold: permutation p takes the 15-hex-char window of
+    # md5(shingle) at offset 2p+1 and MINs it over the shingle set (fixed
+    # width lowercase hex, so string MIN == numeric MIN in any SQL engine;
+    # perms <= 9 keeps every window inside the 32-char digest). One md5 per
+    # shingle serves every permutation; the derived permutations share hash
+    # bits, which correlates bands slightly — fine for candidates that are
+    # verified exactly downstream. The 'g'*15 sentinel sorts after every
+    # window and the length filter guarantees the fold replaces it; finish
+    # maps the accumulator straight to the band keys.
     # The whole aggregate is ONE F.expr SQL string: the Column-builder form
     # issued ~6 py4j round trips per struct field (seconds of driver
     # latency at high perms — q71b's 64-perm fold cost 2.5 s to BUILD).
@@ -476,7 +397,7 @@ def minhash_pairs_fast(
     families); the exact sets differ, so correctness is pinned by tests
     (injected duplicates + recall vs the md5 path), not a SQL oracle.
 
-    Like minhash_signature, the signature is pure higher-order functions —
+    Like band_keys_md5, the signature is pure higher-order functions —
     one codegen projection per document, no shingle-row explosion and no
     groupBy shuffle; the only shuffle in the whole operator is the (band,
     band_key) bucket groupBy, whose keys are uniform int64."""
@@ -979,7 +900,9 @@ def duplicate_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     label is folded into the round's plan, and the checkpoint's own job both
     truncates the lineage and counts the labels that changed — the stop
     test needs no job of its own. No change means every edge joins equal
-    labels, so each component carries its minimum id."""
+    labels, so each component carries its minimum id. Labels still changing
+    in round `max_iters` raise RuntimeError rather than return split
+    clusters."""
     # single-execution guard (the repo's two-union-branch invariant): the
     # forward/reverse edge projections below prune differently, so WITHOUT
     # this checkpoint the upstream pair-generation plan (LSH + exact
@@ -1028,6 +951,11 @@ def duplicate_components(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
         )
         if st["changed"] == 0:
             break
+    else:
+        raise RuntimeError(
+            f"duplicate_components: labels still changing after max_iters={max_iters} "
+            "rounds, so clusters would come back split; raise max_iters"
+        )
     return labels.select(F.col("node").alias("doc"), F.col("label").alias("component"))
 
 

@@ -723,6 +723,19 @@ def _bbox_cover_cells(df: DataFrame, cell_size: float, prefix: str) -> DataFrame
     ).drop("ci", "cj")
 
 
+def _ref_cell(cell_size: float):
+    """PBSM reference cell of an (l, r) bbox pair: the grid cell holding the
+    (max xmin, max ymin) corner of the bbox intersection. That cell is in
+    both bbox covers by construction, so keeping a cell-join row only where
+    `cell` equals it emits each pair exactly once, map-side."""
+    cs = F.lit(cell_size)
+    return (
+        F.floor(F.greatest("lxmin", "rxmin") / cs).cast("long") + cells.GRID_OFF
+    ) * F.lit(1 << cells.GRID_SHIFT) + (
+        F.floor(F.greatest("lymin", "rymin") / cs).cast("long") + cells.GRID_OFF
+    )
+
+
 def _flat_ring_cols(rings_col, suffix: str) -> list:
     """Flatten `rings` (array<array<struct<x,y>>>) into Arrow-friendly
     primitive columns xs/ys (array<double>) + nv (per-ring vertex counts) —
@@ -832,20 +845,18 @@ def overlay_join(
         )
 
     l, r = side(left, left_id, "l"), side(right, right_id, "r")
-    # each side feeds BOTH the cover explosion and the payload join —
-    # without persistence the upstream feature build executes twice per
-    # side. Repartition first: the checkpoint captures the AQE-coalesced
-    # layout (~1 partition for small-byte frames), serializing every
-    # downstream map stage. Lazy, and the two sides checkpoint CONCURRENTLY
-    # (round 8: ~3.4 s sequential vs ~0.4-1.8 s overlapped on the q68
-    # inputs); an eager pair made a 1000×1000 call + collect fire 10 jobs, not 8.
-    par = l.sparkSession.sparkContext.defaultParallelism
-    (l, _), (r, _) = checkpoint(l.repartition(par), r.repartition(par), eager=False)
     # the rect flag (1 bool, computed once per feature) rides the SKINNY
     # cover join, so rect×rect pairs — decided entirely by bbox arithmetic —
-    # never pay the ring-payload joins at all
-    lc = _bbox_cover_cells(l.drop("rings_l"), cell_size, "l")
-    rc = _bbox_cover_cells(r.drop("rings_r"), cell_size, "r")
+    # never pay the ring-payload joins at all. The sides are not
+    # checkpointed: the cover join runs inside the eager pair checkpoint
+    # below, and the kernel branch's payload joins read the upstream
+    # directly. The skinny cover input is spread to one partition per core
+    # first — without it the cover explosion and cell join run in the
+    # scan's few partitions (q68 at sf0.1, 4 vCPUs, local[3]: collect
+    # median 1.0 s → 2.0 s without it).
+    par = l.sparkSession.sparkContext.defaultParallelism
+    lc = _bbox_cover_cells(l.drop("rings_l").repartition(par), cell_size, "l")
+    rc = _bbox_cover_cells(r.drop("rings_r").repartition(par), cell_size, "r")
     cand = lc.join(rc, "cell")
     # bbox overlap prefilter
     cand = cand.filter(
@@ -855,14 +866,7 @@ def overlay_join(
         & (F.col("lymax") > F.col("rymin"))
     )
     # reference-cell dedup (report-once)
-    ref_cell = (
-        F.floor(F.greatest("lxmin", "rxmin") / F.lit(cell_size)).cast("long")
-        + cells.GRID_OFF
-    ) * F.lit(1 << cells.GRID_SHIFT) + (
-        F.floor(F.greatest("lymin", "rymin") / F.lit(cell_size)).cast("long")
-        + cells.GRID_OFF
-    )
-    cand = cand.filter(F.col("cell") == ref_cell).select(
+    cand = cand.filter(F.col("cell") == _ref_cell(cell_size)).select(
         "id_l", "id_r", "rect_l", "rect_r",
         "lxmin", "lymin", "lxmax", "lymax",
         "rxmin", "rymin", "rxmax", "rymax",
@@ -1234,9 +1238,9 @@ def intersects_join_ri(
     # rect × rect pairs: an axis-rect IS its bbox, so the pair verdict is
     # GLOBAL bbox arithmetic — overlap area > 1e-9 (the exact kernel's own
     # rect∩rect result). These pairs come STRAIGHT OFF THE COVERS: no mask
-    # computation, no wide mask join, no candidate checkpoint — only a
-    # skinny (id, cell, bbox) explosion reaches the cell-join shuffle, and
-    # the per-cell rows collapse in one dropDuplicates. Same discipline as
+    # computation, no wide mask join — only a skinny (id, cell, bbox)
+    # explosion reaches the cell-join shuffle, and the per-cell rows
+    # collapse at the reference cell. Same discipline as
     # overlay_join's native rect path — at scale the common cadastre case
     # (axis-aligned parcels/buildings) pays bitmask cost only when a general
     # polygon is actually on one side of the pair.
@@ -1252,23 +1256,13 @@ def intersects_join_ri(
     gpy = F.least(F.col("lymax"), F.col("rymax")) - F.greatest(
         F.col("lymin"), F.col("rymin")
     )
-    # PBSM reference-cell dedup (round 8, same construction as
-    # overlay_join): a pair sharing k cover cells is emitted ONLY from the
-    # cell holding the top-left corner of the bbox intersection — that cell
-    # is in both bbox covers by construction, so the per-cell duplicates
-    # are eliminated map-side and the pair stream never shuffles again
-    # (dropDuplicates previously hash-aggregated + exchanged it).
-    ref_cell = (
-        F.floor(F.greatest("lxmin", "rxmin") / F.lit(cell_size)).cast("long")
-        + cells.GRID_OFF
-    ) * F.lit(1 << cells.GRID_SHIFT) + (
-        F.floor(F.greatest("lymin", "rymin") / F.lit(cell_size)).cast("long")
-        + cells.GRID_OFF
-    )
+    # PBSM reference-cell dedup (_ref_cell, same construction as
+    # overlay_join): the per-cell duplicates are eliminated map-side and the
+    # pair stream never shuffles again
     rect_pairs = (
         lrect.join(rrect, "cell")
         .filter((gpx > 0) & (gpy > 0) & (gpx * gpy > 1e-9))
-        .filter(F.col("cell") == ref_cell)
+        .filter(F.col("cell") == _ref_cell(cell_size))
         .select("id_l", "id_r")
         .withColumn("method", F.lit("rect"))
     )
@@ -1290,9 +1284,6 @@ def intersects_join_ri(
     # masks stream into a single cell join; no mask checkpoints, no
     # per-family frames: a 4-frame family split was measured ~4 s SLOWER at
     # sf0.1 from driver planning + empty-partition checkpoint jobs alone.
-    # rect×rect rows are dropped right after the join probe, BEFORE the
-    # candidate checkpoint — they stream through codegen at ~ns/row and
-    # never materialize.
     lm = _masks_over_cover(lsrc, cell_size, sub).select(
         F.col("id").alias("id_l"),
         F.col("rect").alias("rect_l"),
@@ -1309,48 +1300,40 @@ def intersects_join_ri(
         F.col("a_mask").alias("a_r"),
         F.col("f_mask").alias("f_r"),
     )
-    cand = (
-        lm.join(rm, "cell")
-        .filter(~(F.col("rect_l") & F.col("rect_r")))
-        .drop("rect_l", "rect_r")
-    )
-    # definite NO pruned natively; the surviving candidate set feeds two
-    # branches (definite-yes, exact kernel) — checkpoint so the mask join
-    # runs once. No repartition (round 8, see overlay_join): AQE's
-    # parallelismFirst layout is kept, and the kernel branch re-spreads
-    # itself via _repartition_for_kernel.
-    cand = cand.filter((F.col("a_l").bitwiseAND(F.col("a_r"))) != 0)
-    cand = cand.localCheckpoint(eager=False)
+    # ONE pass over the mask join, no candidate checkpoint: rect×rect rows
+    # and definite NO are dropped natively, and each surviving cell row
+    # carries its definite-YES flag `ri`
     definite = (F.col("f_l").bitwiseAND(F.col("a_r")) != 0) | (
         F.col("a_l").bitwiseAND(F.col("f_r")) != 0
     )
-    yes = cand.filter(definite).select(
-        "id_l", "id_r", F.lit("ri").alias("method")
-    )
-    ambiguous = cand.filter(~definite)
-
-    # non-rect ambiguous pairs: re-join flat ring payloads by id (the skinny
-    # mask join never multiplied them through the per-cell pair explosion).
-    # The payloads come from the CHECKPOINTED covers (one first() per id),
-    # not from a re-scan of the upstream feature pipeline — the broadcast
-    # sides of these joins materialize eagerly, so a `left`/`right` subtree
-    # here would re-run the whole feature build even when ambiguous is empty
-    lpay = lsrc.groupBy(F.col("id").alias("id_l")).agg(
-        F.first("xs").alias("xs_l"),
-        F.first("ys").alias("ys_l"),
-        F.first("nv").alias("nv_l"),
-    )
-    rpay = rsrc.groupBy(F.col("id").alias("id_r")).agg(
-        F.first("xs").alias("xs_r"),
-        F.first("ys").alias("ys_r"),
-        F.first("nv").alias("nv_r"),
-    )
-    ambiguous = (
-        ambiguous.select("id_l", "id_r", "cell")
-        .join(lpay, "id_l")
-        .join(rpay, "id_r")
+    cand = (
+        lm.join(rm, "cell")
+        .filter(~(F.col("rect_l") & F.col("rect_r")))
+        .filter(F.col("a_l").bitwiseAND(F.col("a_r")) != 0)
+        .select("id_l", "id_r", "cell", definite.alias("ri"))
     )
 
+    # flat ring payloads re-join by id (the skinny mask join never
+    # multiplied them through the per-cell pair explosion), LEFT-joined on
+    # keys that are null for definite rows, so only ambiguous rows carry a
+    # payload. The payloads come from the CHECKPOINTED covers (one first()
+    # per id), not from a re-scan of the upstream feature pipeline — the
+    # broadcast sides of these joins materialize eagerly, so a
+    # `left`/`right` subtree here would re-run the whole feature build
+    def payload(src: DataFrame, s: str) -> DataFrame:
+        return src.groupBy(F.col("id").alias(f"_k{s}")).agg(
+            *[F.first(c).alias(f"{c}_{s}") for c in ("xs", "ys", "nv")]
+        )
+
+    cand = (
+        cand.withColumn("_kl", F.when(~F.col("ri"), F.col("id_l")))
+        .withColumn("_kr", F.when(~F.col("ri"), F.col("id_r")))
+        .join(payload(lsrc, "l"), "_kl", "left")
+        .join(payload(rsrc, "r"), "_kr", "left")
+    )
+
+    # Spark evaluates a pandas UDF on EVERY row, even under `when`, so the
+    # kernel answers False for the definite rows' null payloads
     @F.pandas_udf(BooleanType())
     def exact(
         xl: pd.Series, yl: pd.Series, nl: pd.Series,
@@ -1359,6 +1342,8 @@ def intersects_join_ri(
     ) -> pd.Series:
         out = np.zeros(len(xl), dtype=bool)
         for k in range(len(xl)):
+            if xl.iloc[k] is None or xr.iloc[k] is None:
+                continue
             rl = geom.rings_from_flat(xl.iloc[k], yl.iloc[k], nl.iloc[k])
             rr = geom.rings_from_flat(xr.iloc[k], yr.iloc[k], nr.iloc[k])
             i, j = cells.grid_decode(np.array([int(cell_s.iloc[k])]))
@@ -1384,16 +1369,17 @@ def intersects_join_ri(
         return pd.Series(out)
 
     exact = exact.asNondeterministic()
-    ambiguous = _repartition_for_kernel(ambiguous)
-    amb_yes = ambiguous.filter(
-        exact("xs_l", "ys_l", "nv_l", "xs_r", "ys_r", "nv_r", "cell")
-    ).select("id_l", "id_r", F.lit("exact").alias("method"))
-    # rect_pairs is disjoint from the mask-join pair space AND already
-    # distinct, so only the mask families need the any-cell dedup — the
-    # rect family unions in WITHOUT re-shuffling through a global agg;
-    # method is 'rect' | 'ri' | 'exact'
+    method = F.when(F.col("ri"), F.lit("ri")).when(
+        exact("xs_l", "ys_l", "nv_l", "xs_r", "ys_r", "nv_r", "cell"), F.lit("exact")
+    )
+    # a pair intersects if ANY shared cell says yes: the per-cell methods
+    # collapse in one any-cell dedup. rect_pairs is disjoint from the
+    # mask-join pair space AND already distinct, so it unions in WITHOUT
+    # re-shuffling through the agg; method is 'rect' | 'ri' | 'exact'
     mask_pairs = (
-        yes.unionByName(amb_yes)
+        _repartition_for_kernel(cand)
+        .select("id_l", "id_r", method.alias("method"))
+        .filter(F.col("method").isNotNull())
         .groupBy("id_l", "id_r")
         .agg(F.min("method").alias("method"))
     )

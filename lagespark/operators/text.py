@@ -86,7 +86,7 @@ def token_count_bpeish_expr(col: str, dialect: str) -> str:
 # ×, ÷, ...). Latin-1 LETTERS (À-ÿ, ß, µ, ª/º) and the superscript digits
 # survive as word characters, and lower() maps À→à identically in Spark
 # (UTF8String) and DuckDB (utf8proc) — verified head-to-head, test-pinned
-# in test_round7_fixes.py. Codepoints above U+00FF still pass through
+# in test_text_clean.py. Codepoints above U+00FF still pass through
 # (they are not in the translate list); a full-Unicode clean wants an ICU
 # tokenizer, which would re-introduce per-row Python — out of scope.
 _PUNCT_SAFE = "".join(

@@ -38,8 +38,8 @@ def _forcing(sides):
     argument positions of every stats-carrying call."""
     real = spatial.checkpoint
 
-    def forced(*frames, eager=True, **stats):
-        out = real(*frames, eager=eager, **stats)
+    def forced(*frames, **stats):
+        out = real(*frames, **stats)
         return [
             (f, {**s, "n_gen": max(s["n_gen"], 1)} if i in sides and "n_gen" in s else s)
             for i, (f, s) in enumerate(out)
@@ -134,6 +134,42 @@ def test_ri_rect_pruning_forced_equals_pruned(spark):
     assert got[()]
     for sides, pairs in got.items():
         assert pairs == got[()], sides
+
+
+def test_builds_fire_jobs_only_inside_checkpoint(spark, monkeypatch):
+    """overlay_join and intersects_join_ri on general-polygon sides (their
+    kernel branches stay in the plan): every job the build fires runs
+    inside the checkpoint helper, none outside it."""
+    rng = np.random.default_rng(5)
+    shapes = [
+        (kind, *rng.uniform(100, 1400, 2), *rng.uniform(60, 500, 2))
+        for kind in ["oct", "rect"] * 8
+    ]
+    (_, a), (_, b) = _side(spark, shapes[:8], "L"), _side(spark, shapes[8:], "R")
+    sc = spark.sparkContext
+    real = spatial.checkpoint
+    group = {}
+
+    def tagged(*frames, **stats):
+        sc.setJobGroup(group["checkpoint"], group["checkpoint"])
+        try:
+            return real(*frames, **stats)
+        finally:
+            sc.setJobGroup(group["build"], group["build"])
+
+    monkeypatch.setattr(spatial, "checkpoint", tagged)
+    try:
+        for op in (spatial.overlay_join, spatial.intersects_join_ri):
+            group.update(build=f"{op.__name__}.build", checkpoint=f"{op.__name__}.checkpoint")
+            sc.setJobGroup(group["build"], group["build"])
+            df = op(a, b, cell_size=250.0)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs = {k: sc.statusTracker().getJobIdsForGroup(g) for k, g in group.items()}
+            assert jobs["build"] == [] and jobs["checkpoint"], (op.__name__, jobs)
+            assert _has_kernel(df) and df.count() > 0, op.__name__
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 SHAPE = st.tuples(

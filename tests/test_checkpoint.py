@@ -5,7 +5,6 @@ come back in argument order."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from lagespark.operators.checkpoint import checkpoint
@@ -38,10 +37,9 @@ def test_stats_equal_separate_agg(spark):
 
 def test_no_stats_returns_empty_dict_lazy_and_eager(spark):
     df = spark.range(10).withColumnRenamed("id", "v")
-    for eager in (False, True):
-        ((cp, st),) = checkpoint(df, eager=eager)
-        assert st == {}
-        assert cp.count() == 10
+    ((cp, st),) = checkpoint(df)
+    assert st == {}
+    assert cp.count() == 10
 
 
 def test_one_job_per_frame_by_job_group(spark):
@@ -79,12 +77,6 @@ def test_empty_and_zero_partition_frames(spark):
     for name, (cp, st) in zip(empties, out):
         assert st == {"n": 0, "s": None, "hi": None, "odd": 0}, name
         assert cp.count() == 0, name
-
-
-def test_stats_need_eager(spark):
-    df = spark.range(10).withColumnRenamed("id", "v")
-    with pytest.raises(ValueError, match="eager"):
-        checkpoint(df, eager=False, n=F.count(F.lit(1)))
 
 
 def test_concurrent_frames_in_argument_order(spark):

@@ -557,15 +557,10 @@ def _union_find_components(pairs) -> dict:
     return {u: find(u) for u in parent}
 
 
-def test_duplicate_components_matches_union_find(spark, monkeypatch):
-    """(doc, component = min id of its cluster) equals a pure-Python
-    union-find on a seeded graph: a 200-node path (forces several
-    pointer-doubling rounds), a 60-node star and an isolated pair, with
-    shuffled ids and edge directions. Every round is ONE checkpoint whose
-    own stat stops the loop; an empty input gives no rows."""
+def _path_star_pair() -> list[tuple[int, int]]:
+    """A seeded 262-node graph: a 200-node path, a 60-node star and an
+    isolated pair, with shuffled ids and edge directions."""
     import numpy as np
-
-    from lagespark.operators import dedup
 
     rng = np.random.default_rng(7)
     ids = [int(i) for i in rng.permutation(10_000)[:262]]
@@ -573,7 +568,18 @@ def test_duplicate_components_matches_union_find(spark, monkeypatch):
     pairs = [(path[i], path[i + 1]) for i in range(199)]
     pairs += [(star[0], leaf) for leaf in star[1:]]
     pairs += [tuple(pair)]
-    pairs = [(a, b) if rng.random() < 0.5 else (b, a) for a, b in pairs]
+    return [(a, b) if rng.random() < 0.5 else (b, a) for a, b in pairs]
+
+
+def test_duplicate_components_matches_union_find(spark, monkeypatch):
+    """(doc, component = min id of its cluster) equals a pure-Python
+    union-find on a seeded graph: a 200-node path (forces several
+    pointer-doubling rounds), a 60-node star and an isolated pair, with
+    shuffled ids and edge directions. Every round is ONE checkpoint whose
+    own stat stops the loop; an empty input gives no rows."""
+    from lagespark.operators import dedup
+
+    pairs = _path_star_pair()
     df = spark.createDataFrame(pairs, "a long, b long")
 
     rounds = []
@@ -593,3 +599,14 @@ def test_duplicate_components_matches_union_find(spark, monkeypatch):
 
     empty = spark.createDataFrame([], "a long, b long")
     assert dedup.duplicate_components(empty).count() == 0
+
+
+def test_duplicate_components_raises_when_max_iters_runs_out(spark):
+    """The 200-node path needs at least 4 rounds (the test above closes it
+    at the default max_iters): with max_iters=3 its labels still change in
+    the last round, which raises instead of returning split clusters."""
+    from lagespark.operators import dedup
+
+    df = spark.createDataFrame(_path_star_pair(), "a long, b long")
+    with pytest.raises(RuntimeError, match="max_iters=3"):
+        dedup.duplicate_components(df, max_iters=3)

@@ -145,11 +145,7 @@ def test_overlay_join_cover_explosion_is_native(spark, monkeypatch):
     from lagespark import harness
     from lagespark.operators import spatial
 
-    real = spatial.checkpoint
-
-    def seam(*frames, eager=True, **stats):
-        if "n_gen" not in stats:
-            return real(*frames, eager=eager, **stats)
+    def seam(*frames, **stats):
         return [(f, {"n_gen": 1}) for f in frames]
 
     a = harness._rect_features(spark, SF, 17)

@@ -491,6 +491,21 @@ def test_ingest_claims_batch_matches_independent_reference(spark):
     assert got == want and len(want) > 0
 
 
+# ingest_claims_batch never emits a self-claim when one doc id appears on
+# several rows (parity with the streaming fn's owner != rid guard)
+def test_ingest_claims_batch_no_self_claim_on_duplicate_ids(spark):
+    from lagespark.streaming import ops
+
+    txt = "the quick brown fox jumps over the lazy dog again and again"
+    rows = [(1, txt), (1, txt), (2, txt), (3, "completely different words here")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {(r.doc_id, r.band, r.dup_of) for r in ops.ingest_claims_batch(docs).collect()}
+    # no self-claims (id 1 appears twice but never claims itself)...
+    assert not any(d == o for d, _, o in got)
+    # ...while doc 2 (a true duplicate of doc 1) claims doc 1 in every band
+    assert {(d, o) for d, _, o in got} == {(2, 1)}
+
+
 def test_stream_dedup_minhash_matches_batch_replay(spark, tmpdir):
     """Streaming claims across TWO real micro-batches == the batch replay
     (ingest_claims_batch on the production xxhash64 path, ts order); exact

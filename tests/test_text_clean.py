@@ -3,7 +3,8 @@ quality punct count are translate()-based, not regex-based. In this Spark
 build regexp evaluation serializes across executor threads (wall time does
 not change with partition count), so a regex in the clean stage's hot
 projection caps it at single-core speed. The rewrite must stay
-bit-identical to the old regex semantics on the ASCII corpus contract."""
+bit-identical to the old regex semantics on the ASCII corpus contract,
+and keep the Latin-1 contract below."""
 
 from __future__ import annotations
 
@@ -95,3 +96,62 @@ def test_regex_free_clean_plan(spark):
     )
     plan = df._jdf.queryExecution().analyzed().toString()
     assert "regexp_replace" not in plan and "regexp_extract" not in plan
+
+
+# -- Latin-1 contract: normalize/quality strip the full Latin-1 punctuation
+# and control range, keep Latin-1 letters, and agree byte-for-byte between
+# Spark and DuckDB on non-ASCII input
+
+_L1_TEXTS = [
+    "Caf\xe9 \xabZ\xfcrich\xbb\xd7 3",        # e-acute/u-uml kept; guillemets, x-sign strip
+    "\xc0 BIENT\xd4T, MONSIEUR!",             # uppercase Latin-1 folds via lower()
+    "gro\xdfe stra\xdfe \u2014 b",             # sharp-s kept; em-dash (>U+00FF) passes
+    "nbsp\xa0separated\xa0words",             # NBSP (0xA0) strips to space
+    "soft\xadhyphen and 10\xf75 = 2",         # SHY (0xAD) and divide-sign strip
+    "\xa9 2024 \xb5-service \xbd price",      # (c) strips; micro + one-half kept (alnum)
+    "mixed \u4e2d\u6587 passthrough",           # CJK beyond U+00FF passes
+    "",
+    None,
+]
+
+
+def test_normalize_latin1_semantics(spark):
+    from lagespark.operators import text
+
+    sdf = spark.createDataFrame([(t,) for t in _L1_TEXTS], "text string")
+    got = [
+        r[0] for r in sdf.selectExpr(text.normalize_expr("text", "spark")).collect()
+    ]
+    assert got[0] == "caf\xe9 z\xfcrich 3"
+    assert got[1] == "\xe0 bient\xf4t monsieur"
+    # em-dash is beyond Latin-1: passes through as its own token
+    assert got[2] == "gro\xdfe stra\xdfe \u2014 b"
+    assert got[3] == "nbsp separated words"
+    assert got[4] == "soft hyphen and 10 5 2"
+    assert got[5] == "2024 \xb5 service \xbd price"
+    assert got[6] == "mixed \u4e2d\u6587 passthrough"
+    assert got[7] == "" and got[8] is None
+
+
+def test_text_exprs_latin1_spark_duckdb_parity(spark, duck):
+    """normalize, punct_ratio, and langid agree byte-for-byte across engines
+    on non-ASCII input — the round-7 contract extension (was ASCII-only)."""
+    from lagespark.operators import text
+
+    sdf = spark.createDataFrame([(t,) for t in _L1_TEXTS], "text string")
+    exprs_s = [
+        text.normalize_expr("text", "spark") + " AS norm",
+        text.quality_exprs("text", "spark")["punct_ratio"] + " AS pr",
+        text.langid_expr("text", "spark") + " AS lang",
+    ]
+    got_s = [tuple(r) for r in sdf.selectExpr(*exprs_s).collect()]
+    q = text.quality_exprs("text", "duckdb")["punct_ratio"]
+    got_d = duck.execute(
+        "WITH t(text) AS (SELECT unnest(?)) SELECT "
+        + text.normalize_expr("text", "duckdb")
+        + f", {q}, "
+        + text.langid_expr("text", "duckdb")
+        + " FROM t",
+        [_L1_TEXTS],
+    ).fetchall()
+    assert got_s == [tuple(r) for r in got_d]
